@@ -105,29 +105,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def table_num_rows(sf_dir: str, name: str) -> int:
-    """Row count of a lake table from the parquet footer — a
-    driver-side metadata read (no Spark job), cached on (path, mtime)
-    like ``parquet_ts_unit``. Used to derive scale-adaptive
-    partitioning constants (e.g. the textdup prefix-sum bucket width)
-    instead of hard-coding either the local or the cluster value."""
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        inner = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        return sum(
-            _parquet_num_rows_cached(p, os.stat(p).st_mtime_ns)
-            for p in inner
-        )
-    return _parquet_num_rows_cached(path, os.stat(path).st_mtime_ns)
-
-
-@lru_cache(maxsize=64)
-def _parquet_num_rows_cached(path: str, mtime_ns: int) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
 def spread_scan(df: DataFrame, key: str) -> DataFrame:
     """Scale-adaptive scan-parallelism fix for heavy per-row work
     (optimization guide §2.5 "input skew: one huge unsplittable file

@@ -2,26 +2,40 @@
 §2.11 [EXT]) — the distributed form of the suffix-array dedup
 diagnostics from the exact-substring-dedup line of work.
 
-A 2^k-token window fingerprint is md5(h_{k-1}(pos) ||
-h_{k-1}(pos + 2^(k-1))): every level is ONE position-shift equi-join
-of the N-row (pos, digest) relation, so all K levels cost O(K·N) and
-the corpus text is scanned exactly once (level 0). Fingerprint
-equality is content equality modulo md5 collisions (~2^-64, and
-identical in both engines — the repo-wide digest posture).
+A 2^k-token window's fingerprint is a mix of the fingerprints of its
+two 2^(k-1)-token halves, so all K levels cost O(K·N) and the text is
+tokenised exactly once (level 0). Fingerprint equality is content
+equality modulo 128-bit hash collisions — the repo-wide digest
+posture.
 
-Per-document sentinel tokens (chr(1) || doc_id, globally unique)
-terminate each document, so a window spanning a document boundary
-contains a unique token and can never be duplicated — the
-generalized-suffix-array trick. Corpus positions come from the same
-two-level prefix sum as operators/packing.py (bucketed within-sums +
-one window over the tiny bucket-totals relation; never a
-single-partition window).
+Only windows inside one document can be duplicated: in the corpus
+token stream every document ends with a unique sentinel token
+(chr(1) || doc_id — the generalized-suffix-array trick), so a window
+that crosses a document end contains that sentinel and occurs once.
+``window_digests`` therefore runs the doubling per document, in one
+vectorized pass over each Arrow batch of token arrays, and emits only
+in-document windows: no corpus positions and no window operator.
+
+``position_stream`` + ``hash_doubling_levels`` (md5 over the global
+position stream, one shift-join per level) and ``oracle_level_ctes``
+(their DuckDB mirror) are the reference formulation the kernel is
+tested against.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from functools import partial
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..catalog import spread_scan
+
+if TYPE_CHECKING:
+    import numpy as np
+    import pyarrow as pa
 
 
 def position_stream(
@@ -116,176 +130,101 @@ def hash_doubling_levels(
     return levels
 
 
-PYRAMID_BLOCK = 16384  # positions per pyramid block; halo fraction =
-# (2^rounds - 1)/PYRAMID_BLOCK ≈ 1.6% at rounds=8 — scale-free (the
-# ratio, not the block count, is what costs), so the same constant is
-# right at sf0.1 and at 100 TB.
-
-# Stream-end pad pair — the 128-bit analogue of the original 'E' pad:
-# combined into the mix when a window runs past the end of the corpus
-# stream, so truncated windows compare equal iff their surviving
-# prefixes do (exactly the md5 formulation's semantics).
-_PAD_A = 0x45
-_PAD_B = 0x45
+# siphash keys of the two token-digest lanes (``pandas.util.hash_array``
+# takes a 16-character key): two independently keyed 64-bit digests
+# form one 128-bit fingerprint. Each lane's level mix starts from its
+# own seed.
+_LANE_KEYS = ("textdup-lane-a:0", "textdup-lane-b:1")
+_LANE_SEEDS = (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F)
 
 
-def adaptive_bucket_width(n_docs: int, parallelism: int) -> int:
-    """Prefix-sum bucket width sized so the bucket-partitioned stages
-    (the posexplode + per-token hashing, the heaviest work in the
-    pyramid pipeline) spread over every core even on a small corpus:
-    ~4x more buckets than cores (guide §2.5 — enough distinct key
-    values that hash collisions don't idle partitions), capped at the
-    original 1000 so at 100 TB the per-bucket window stays small and
-    the bucket-offsets relation stays a broadcastable
-    n_docs/1000-row table."""
-    return max(1, min(1000, n_docs // (4 * parallelism)))
+def _fmix(x: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer: a bijective avalanche mix of uint64
+    lanes (multiplication wraps modulo 2^64)."""
+    import numpy as np
+
+    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return x ^ (x >> np.uint64(31))
 
 
-def token_stream64(
-    docs: DataFrame, bucket_width: int = 1000
-) -> DataFrame:
-    """The r15-optimized twin of ``position_stream``: one relation
-    (pos, doc_id, ha, hb) where (ha, hb) is a 128-bit token
-    fingerprint as TWO int64 ``xxhash64`` columns (native codegen, 16
-    bytes on every exchange vs the 33+-byte md5 string — guide §2.3)
-    and doc_id is NULL on sentinel positions (the docmap is carried
-    in-stream instead of joined back per level). Same corpus layout:
-    two-level prefix sum, per-doc unique sentinel token
-    chr(1)||doc_id. Fingerprint equality is content equality modulo
-    hash collisions — the repo-wide digest posture, at 128 bits like
-    md5 (two independently-seeded xxhash64 lanes)."""
-    d = docs.select(
+def _chain(seed: int, *words: np.ndarray) -> np.ndarray:
+    """One 64-bit lane over an ordered word sequence. For a fixed
+    prefix every step is a bijection of the next word, so the order
+    of the words matters (a window is not its halves swapped)."""
+    import numpy as np
+
+    h = np.uint64(seed)
+    for w in words:
+        h = _fmix(h ^ w)
+    return h
+
+
+def _doubling_batches(
+    batches: Iterator[pa.RecordBatch], rounds: int
+) -> Iterator[pa.RecordBatch]:
+    """The per-document doubling kernel over Arrow batches of
+    (doc_id, w: array<string>). Tokens of a batch are laid out flat;
+    level k's digest at flat position i mixes level k-1's digests at
+    i and i + 2^(k-1), and is kept only where the window fits inside
+    its document (``rem`` = tokens left in the document from i on),
+    so pairs that straddle two documents of the flat layout are
+    computed but never emitted. A NULL text has no tokens."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pandas.util import hash_array
+
+    seed_a, seed_b = _LANE_SEEDS
+    for batch in batches:
+        w = batch.column("w")
+        lens = (
+            pc.fill_null(pc.list_value_length(w), 0)
+            .to_numpy()
+            .astype(np.int64)
+        )
+        n = int(lens.sum())
+        if n == 0:
+            continue
+        toks = pc.list_flatten(w).to_numpy(zero_copy_only=False)
+        doc = np.repeat(batch.column("doc_id").to_numpy(), lens)
+        rem = np.repeat(np.cumsum(lens), lens) - np.arange(n)
+        ha = hash_array(toks, hash_key=_LANE_KEYS[0])
+        hb = hash_array(toks, hash_key=_LANE_KEYS[1])
+        for k in range(rounds + 1):
+            if k:
+                d = 1 << (k - 1)
+                a0, a1, b0, b1 = ha[:-d], ha[d:], hb[:-d], hb[d:]
+                ha = _chain(seed_a, a0, a1, b0, b1)
+                hb = _chain(seed_b, b0, b1, a0, a1)
+            keep = np.flatnonzero(rem[: len(ha)] >= (1 << k))
+            if not len(keep):
+                break
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(doc[keep]),
+                    pa.array(np.full(len(keep), k, dtype=np.int32)),
+                    pa.array(ha[keep].view(np.int64)),
+                    pa.array(hb[keep].view(np.int64)),
+                ],
+                names=["doc_id", "k", "ha", "hb"],
+            )
+
+
+def window_digests(docs: DataFrame, rounds: int) -> DataFrame:
+    """(doc_id, k, ha, hb) for every in-document 2^k-token window,
+    k = 0..rounds: (ha, hb) is the window's 128-bit fingerprint.
+    Tokens are ``split(trim(text), '\\s+')`` in the JVM, exactly as
+    ``position_stream`` and the DuckDB oracle split them. The doubling
+    runs in ``mapInArrow`` right after the scan and adds no exchange;
+    ``spread_scan`` spreads a one-file scan over the cores first."""
+    toks = spread_scan(docs, "doc_id").select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("w")
-    ).withColumn("n", F.size("w").cast("bigint"))
-    b = d.withColumn("bucket", F.expr(f"doc_id div {bucket_width}"))
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    within = b.withColumn("cum_in", F.sum(F.col("n") + 1).over(w_in))
-    totals = b.groupBy("bucket").agg(
-        F.sum(F.col("n") + 1).alias("btot")
+    return toks.mapInArrow(
+        partial(_doubling_batches, rounds=rounds),
+        "doc_id bigint, k int, ha bigint, hb bigint",
     )
-    w_b = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "bucket",
-        F.coalesce(F.sum("btot").over(w_b), F.lit(0)).alias("boff"),
-    )
-    placed = within.join(F.broadcast(offsets), "bucket").withColumn(
-        "cb", F.col("boff") + F.col("cum_in") - (F.col("n") + 1)
-    )
-    toks = placed.select(
-        "doc_id",
-        "cb",
-        "n",
-        F.posexplode("w").alias("i", "tok"),
-    ).select(
-        "doc_id",
-        (F.col("cb") + F.col("i")).alias("pos"),
-        F.xxhash64("tok").alias("ha"),
-        F.xxhash64(F.lit("\x02"), F.col("tok")).alias("hb"),
-    )
-    sent_tok = F.concat(F.lit("\x01"), F.col("doc_id").cast("string"))
-    sent = placed.select(
-        F.lit(None).cast("bigint").alias("doc_id"),
-        (F.col("cb") + F.col("n")).alias("pos"),
-        F.xxhash64(sent_tok).alias("ha"),
-        F.xxhash64(F.lit("\x02"), sent_tok).alias("hb"),
-    )
-    # r15: a localCheckpoint lineage cut here (the shared-relation
-    # rule — hash_doubling_pyramid consumes the stream twice, owned +
-    # halo, so the plan inlines 16 small parquet scans) was A/B-
-    # measured and REVERTED: spectrum 4.63->7.06 s, maxrun
-    # 4.53->9.94 s. Re-hashing the stream 4x is cheaper than
-    # materializing ~n_tokens x 32-byte rows; at 100 TB the trade is
-    # ~4 tokenize passes vs a stream-sized persist write+read — a
-    # wash, not a win. See OPTIMIZATION_r15.md.
-    return toks.unionByName(sent)
-
-
-def hash_doubling_pyramid(
-    stream: DataFrame, rounds: int, block: int = PYRAMID_BLOCK
-) -> DataFrame:
-    """All ``rounds``+1 doubling levels in ONE shuffle (r15, guide
-    §2.4): instead of one position-shift equi-join per level (2
-    exchanges + a lineage cut each, 2·rounds exchanges total), block
-    the dense position stream (block = pos div B), duplicate the
-    first 2^rounds - 1 rows of each block into its predecessor (the
-    halo), and compute every level as chained ``lead`` window
-    expressions under the single spec partitionBy(block) orderBy(pos)
-    — Spark plans one Exchange + one Sort and stacks all the Window
-    operators on top, entirely in the JVM.
-
-    Correctness: positions are dense, so lead(·, d) is the value at
-    pos+d; an owned row's level-k value depends on positions
-    [pos, pos+2^k-1], all present in its block's partition because
-    the halo extends 2^rounds - 1 past the block end; halo rows'
-    own (possibly truncated) values are dropped by the ownership
-    filter. A missing lead therefore occurs ONLY at the true stream
-    end, where the constant pad pair reproduces the original 'E'-pad
-    semantics. Level-(k) fingerprints are two xxhash64 mixes of the
-    level-(k-1) pair and its shifted pair — content equality modulo
-    128-bit collisions, the same posture as the md5 chain it
-    replaces (equality pytest'd against it at sf0.001).
-
-    Returns (pos, doc_id, h0a, h0b, ..., h{rounds}a, h{rounds}b)."""
-    owned = stream.withColumn(
-        "block", F.expr(f"pos div {block}")
-    )
-    halo_n = (1 << rounds) - 1
-    halo = (
-        stream.filter(
-            (F.col("pos") % block < halo_n)
-            & (F.col("pos") >= block)
-        )
-        .withColumn("block", F.expr(f"pos div {block}") - 1)
-    )
-    allr = owned.unionByName(halo).withColumnsRenamed(
-        {"ha": "h0a", "hb": "h0b"}
-    )
-    w = Window.partitionBy("block").orderBy("pos")
-    df = allr
-    for k in range(1, rounds + 1):
-        delta = 1 << (k - 1)
-        pa, pb = f"h{k - 1}a", f"h{k - 1}b"
-        la = F.coalesce(
-            F.lead(pa, delta).over(w), F.lit(_PAD_A)
-        )
-        lb = F.coalesce(
-            F.lead(pb, delta).over(w), F.lit(_PAD_B)
-        )
-        df = df.withColumns(
-            {
-                f"h{k}a": F.xxhash64(F.col(pa), la, F.col(pb), lb),
-                f"h{k}b": F.xxhash64(
-                    F.lit(2 * k + 1), F.col(pb), lb, F.col(pa), la
-                ),
-            }
-        )
-    keep = ["pos", "doc_id"] + [
-        f"h{k}{s}" for k in range(rounds + 1) for s in ("a", "b")
-    ]
-    return df.filter(
-        F.expr(f"pos div {block}") == F.col("block")
-    ).select(*keep)
-
-
-def pyramid_long(pyr: DataFrame, rounds: int) -> DataFrame:
-    """Melt the wide pyramid to (doc_id, k, ha, hb) — one stack()
-    generator, no shuffle; feeds a single grouped pass over all
-    levels instead of one job per level."""
-    stack_args = ", ".join(
-        f"{k}, h{k}a, h{k}b" for k in range(rounds + 1)
-    )
-    return pyr.select(
-        "doc_id",
-        F.expr(
-            f"stack({rounds + 1}, {stack_args}) AS (k, ha, hb)"
-        ),
-    ).select("doc_id", "k", "ha", "hb")
 
 
 def oracle_level_ctes(rounds: int) -> str:

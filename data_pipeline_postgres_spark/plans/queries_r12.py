@@ -833,42 +833,19 @@ def q_dedup_payload_incremental(
 # exact-substring line of work): for every window length 2^k, how much
 # of the corpus token stream is part of a duplicated window. Naive
 # evaluation re-shingles the corpus per k (sum_k N*2^k tokens touched);
-# HASH DOUBLING computes every level in O(N) per round: a 2^k-window
-# fingerprint is md5(h_{k-1}(pos) || h_{k-1}(pos + 2^(k-1))), so each
-# round is ONE position-shift self-join of an N-row relation — the
-# text is never touched again after round 0. Rank-style prefix
-# doubling would need a dense-rank (two extra shuffles) per round;
-# md5 doubling gets content-identity modulo collisions (~2^-64,
-# identical in both engines, the repo-wide digest posture).
+# HASH DOUBLING derives a 2^k-window's fingerprint from its two
+# 2^(k-1)-halves, so every level costs O(N) and the text is tokenised
+# once. Fingerprints are content identity modulo 128-bit collisions,
+# the repo-wide digest posture.
 #
-# Per-doc unique sentinels (chr(1) || doc_id) terminate each doc, so
-# windows spanning a document boundary contain a globally unique
-# token and can never count as duplicated — the generalized-suffix-
-# array trick.
+# The oracle lays the corpus out as one token stream with a unique
+# sentinel (chr(1) || doc_id) after each document, so a window that
+# crosses a document end contains a unique token and occurs once.
+# Only in-document windows can repeat, which is why the engine runs
+# the doubling per document (operators/textdup.window_digests) and
+# never builds corpus positions.
 
 _SPECTRUM_ROUNDS = 8  # windows 2^0 .. 2^8 = 256 tokens
-
-
-def _token_stream(spark: SparkSession, sf_dir: str):
-    """The shared 128-bit token stream for the pyramid queries, with
-    the prefix-sum bucket width derived from the table's footer row
-    count (r15, guide §2.5): the heavy posexplode + per-token hashing
-    stage is partitioned by bucket, and the original fixed width of
-    1000 yields only n_docs/1000 distinct buckets — 5 at the local
-    test SF, idling 27 of 32 cores. The adaptive width keeps ~4x more
-    buckets than cores locally and returns the same 1000 at scale
-    (positions are identical for ANY width — the two-level prefix sum
-    computes global dense positions — so results are unchanged)."""
-    from ..catalog import table_num_rows
-    from ..operators import textdup
-
-    width = textdup.adaptive_bucket_width(
-        table_num_rows(sf_dir, "documents"),
-        spark.sparkContext.defaultParallelism,
-    )
-    return textdup.token_stream64(
-        _docs(spark, sf_dir), bucket_width=width
-    )
 
 
 def _spectrum_oracle() -> str:
@@ -903,52 +880,35 @@ def q_docs_dup_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix-array-dedup tuning curve: pick the removal threshold where
     the spectrum's mass collapses (here 2 -> 4 tokens drops ~10x).
 
-    Scale shape: hash doubling — round k is ONE equi-join of the
-    N-row (pos, digest) relation onto itself shifted by 2^(k-1)
-    (position is the join key; range partitioning keeps the shift
-    join co-located), so all 9 levels cost O(9N) joins and the TEXT
-    is scanned exactly once (round 0). Per-doc sentinel tokens make
-    cross-document windows unique, so no window survives a doc
-    boundary. Corpus positions come from the same two-level prefix
-    sum as docs_pack_sequences — no single-partition window."""
+    Scale shape: one vectorized per-document doubling pass over the
+    scan (all 9 levels, no exchange), then one grouping by
+    fingerprint and a 9-row per-level aggregate. Every level of the
+    oracle's stream also holds windows that cross a sentinel, each
+    counted once, so a level without duplicates reports
+    max_multiplicity 1."""
     from ..operators import textdup
 
-    # r15 optimization (guide §2.4): the 9 per-level shift-joins
-    # (2 exchanges + a lineage cut each) collapse into ONE blocked
-    # window pyramid (1 Exchange + 1 Sort + stacked Window ops, all
-    # JVM) over 128-bit xxhash64 pair fingerprints (16-byte keys vs
-    # 33+-byte md5 strings on every exchange, guide §2.3), and the 9
-    # per-level groupBy jobs collapse into one stack() + one grouped
-    # pass. Fingerprint equality remains content equality modulo
-    # 128-bit collisions — the repo-wide digest posture; spectrum
-    # equality vs the md5 chain is pytest'd at sf0.001
-    # (tests/test_round15_opt.py) and the md5 oracle is unchanged.
-    stream = _token_stream(spark, sf_dir)
-    pyr = textdup.hash_doubling_pyramid(stream, _SPECTRUM_ROUNDS)
-    long = textdup.pyramid_long(pyr, _SPECTRUM_ROUNDS)
-    cnt = long.groupBy("k", "ha", "hb").agg(
-        F.count("*").alias("cnt")
+    cnt = (
+        textdup.window_digests(_docs(spark, sf_dir), _SPECTRUM_ROUNDS)
+        .groupBy("k", "ha", "hb")
+        .agg(F.count("*").alias("cnt"))
     )
-    return cnt.groupBy("k").agg(
-        F.expr("cast(shiftleft(1L, k) as bigint)").alias(
-            "win_tokens"
+    per_k = cnt.groupBy(F.col("k").cast("bigint").alias("k")).agg(
+        F.sum(F.when(F.col("cnt") >= 2, F.col("cnt"))).alias(
+            "n_dup_positions"
         ),
-        F.coalesce(
-            F.sum(F.when(F.col("cnt") >= 2, F.col("cnt"))),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("n_dup_positions"),
-        F.sum(F.when(F.col("cnt") >= 2, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_dup_windows"),
-        F.max("cnt").cast("bigint").alias("max_multiplicity"),
-    ).select(
-        F.col("k").cast("bigint").alias("k"),
-        "win_tokens",
-        "n_dup_positions",
-        "n_dup_windows",
-        "max_multiplicity",
+        F.count(F.when(F.col("cnt") >= 2, 1)).alias("n_dup_windows"),
+        F.max("cnt").alias("max_multiplicity"),
+    )
+    levels = spark.range(_SPECTRUM_ROUNDS + 1).select(
+        F.col("id").alias("k")
+    )
+    return levels.join(per_k, "k", "left").select(
+        "k",
+        F.expr("shiftleft(1L, k)").alias("win_tokens"),
+        F.coalesce("n_dup_positions", F.lit(0)).alias("n_dup_positions"),
+        F.coalesce("n_dup_windows", F.lit(0)).alias("n_dup_windows"),
+        F.coalesce("max_multiplicity", F.lit(1)).alias("max_multiplicity"),
     )
 
 
@@ -1016,38 +976,19 @@ def q_docs_dup_maxrun(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, max_dup_win; 0 when even its 1-grams are unique). The
     per-document removal criterion behind exact-substring dedup
     ("drop/trim docs sharing a >= 64-token run with anything else"),
-    resolved from the SAME hash-doubling levels as docs_dup_spectrum
-    — the text is scanned once, each level once.
+    resolved from the SAME window fingerprints as docs_dup_spectrum.
 
-    Scale shape: per level, duplicated digests come from one
-    groupBy(h) (map-side combined); flagged positions join back to
-    the position->doc map (both sides shrink with k); the final
-    per-doc max is one groupBy. Nothing rescans text; no data-sized
-    window."""
+    Scale shape: the per-document doubling pass of the spectrum, one
+    count window per fingerprint, and one per-doc max. Nothing
+    rescans text. A doc's duplicated windows all lie inside it, so
+    the per-doc max is exact."""
     from ..operators import textdup
 
-    # r15 optimization: same single-shuffle pyramid as
-    # docs_dup_spectrum (guide §2.4); additionally the per-level
-    # dup-digest groupBy + join-back + docmap join (3 exchanges x 9
-    # levels) become ONE window count over the melted (k, ha, hb)
-    # relation — doc_id rides along in the stream (sentinels carry
-    # NULL and are filtered, exactly the old docmap inner join's
-    # effect). Results pytest'd equal to the md5-chain formulation
-    # at sf0.001; md5 oracle unchanged.
-    stream = _token_stream(spark, sf_dir)
-    pyr = textdup.hash_doubling_pyramid(stream, _SPECTRUM_ROUNDS)
-    long = textdup.pyramid_long(pyr, _SPECTRUM_ROUNDS)
-    # r16 measured REVERT (guide §1): repartition(k,ha,hb) + a
-    # pre-aggregate per (k,ha,hb,doc_id) + window-sum — intended to
-    # shrink the WindowExec sort to the occurrence-deduped relation —
-    # went 4.19/4.50 s → 5.97/5.33 s in two interleaved A/B pairs
-    # (control orders_theil_sen_trend flat at 3.1-3.2 s): the hash
-    # aggregate over the mostly-distinct 4-tuple keys costs more than
-    # the sort it saves. The plain count window stays.
+    wins = textdup.window_digests(_docs(spark, sf_dir), _SPECTRUM_ROUNDS)
     w = Window.partitionBy("k", "ha", "hb")
     flags = (
-        long.withColumn("cnt", F.count("*").over(w))
-        .filter((F.col("cnt") >= 2) & F.col("doc_id").isNotNull())
+        wins.withColumn("cnt", F.count("*").over(w))
+        .filter(F.col("cnt") >= 2)
         .select("doc_id", "k")
     )
     all_docs = _docs(spark, sf_dir).select("doc_id")

@@ -38,8 +38,19 @@ def get_spark(
     - Arrow on: fast pandas interchange for the Pandas-UDF slow path.
     - Dynamic partition overwrite: idempotent incremental re-runs
       (the reference's ``replace=True`` on every S3 write).
+    - Python workers get this package's parent directory on their
+      ``PYTHONPATH`` (before any inherited one), so UDF and Arrow
+      kernels that reference package functions import from any
+      working directory; ``extra_conf`` may set
+      ``spark.executorEnv.PYTHONPATH`` itself.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    pkg_parent = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    )
+    worker_path = os.pathsep.join(
+        p for p in (pkg_parent, os.environ.get("PYTHONPATH")) if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -56,6 +67,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

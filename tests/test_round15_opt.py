@@ -77,9 +77,8 @@ def test_payload_grams_carries_extra_cols(spark):
 
 
 def _old_spectrum(spark, rounds):
-    """The original md5-chain formulation of docs_dup_spectrum,
-    reproduced from the pre-r15 query body (operators kept as the
-    reference twins)."""
+    """The md5-chain formulation of docs_dup_spectrum over the global
+    position stream (operators kept as the reference twins)."""
     from data_pipeline_postgres_spark.operators import textdup
 
     level0, _ = textdup.position_stream(_docs(spark))
@@ -142,9 +141,10 @@ def _old_maxrun(spark, rounds):
 
 
 def test_dup_spectrum_pyramid_matches_md5_chain(spark):
-    """The single-shuffle xxhash64-pair pyramid must reproduce the
+    """The per-document 128-bit doubling kernel must reproduce the
     md5 shift-join chain's spectrum exactly (equality structure is
-    all that feeds the output)."""
+    all that feeds the output). Partition, batch and edge-case checks
+    of the kernel are in tests/test_textdup.py."""
     from data_pipeline_postgres_spark.plans.queries_r12 import (
         _SPECTRUM_ROUNDS,
         q_docs_dup_spectrum,
@@ -174,26 +174,6 @@ def test_dup_maxrun_pyramid_matches_md5_chain(spark):
     )
     assert new == old
     assert any(r[1] > 0 for r in new)
-
-
-def test_pyramid_block_boundary_independence(spark):
-    """Shrinking the pyramid block so that many block boundaries (and
-    halos) land inside documents must not change the spectrum — the
-    halo correctness argument, exercised."""
-    from data_pipeline_postgres_spark.operators import textdup
-
-    rounds = 4
-    stream = textdup.token_stream64(_docs(spark))
-    big = textdup.hash_doubling_pyramid(stream, rounds, block=1 << 20)
-    small = textdup.hash_doubling_pyramid(stream, rounds, block=300)
-    cols = [f"h{k}{s}" for k in range(rounds + 1) for s in ("a", "b")]
-    a = sorted(
-        map(tuple, big.select("pos", *cols).collect())
-    )
-    b = sorted(
-        map(tuple, small.select("pos", *cols).collect())
-    )
-    assert a == b
 
 
 @pytest.mark.parametrize("mask", [64, 16])

@@ -57,10 +57,6 @@ ALLOWED_UNPARTITIONED = {
     # shelf-bin count windows over the same <=7-row class relation;
     # chunk side reuses the pack_sequences prefix-sum shape
     "docs_pack_efficiency",
-    # corpus positions via the pack_sequences two-level prefix sum:
-    # per-bucket windows + one window over the <=n_docs/1000-row
-    # bucket-totals relation
-    "docs_dup_spectrum",
     # greedy budget scan over per-doc token totals ranked by score,
     # limited upstream
     "docs_token_budget_select",
