@@ -18,6 +18,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -34,14 +35,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-# events.parquet physical layout (TESTDATA.md) when the ts column is
-# TIMESTAMP(NANOS): read as raw long — see load_table.
-EVENTS_RAW_SCHEMA = (
-    "event_id bigint, ts long, user_id bigint, "
-    "event_type string, value double, props string"
-)
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -74,27 +67,62 @@ def _parquet_ts_unit_cached(path: str, mtime_ns: int, column: str) -> str:
     return pq.read_schema(path).field(column).type.unit
 
 
+def _events_schema(ts: T.DataType) -> T.StructType:
+    return T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", ts),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+            T.StructField("props", T.StringType()),
+        ]
+    )
+
+
+# events.parquet physical layout (TESTDATA.md). A TIMESTAMP(NANOS) ts
+# is read as raw long and floored to micros by ``_fix_ts``; SECONDS /
+# MILLIS / MICROS files read natively as TimestampType.
+EVENTS_RAW_SCHEMA = _events_schema(T.LongType())
+EVENTS_TS_SCHEMA = _events_schema(T.TimestampType())
+
+
+def _events_read_schema(path: str) -> tuple[T.StructType, bool]:
+    """(explicit read schema, needs ``_fix_ts``?) for an events parquet
+    file or directory. The only place the engine branches on the
+    file's ts unit, so batch and streaming readers both survive the
+    driver flipping the testdata's unit."""
+    nanos = parquet_ts_unit(path) == "ns"
+    return (EVENTS_RAW_SCHEMA if nanos else EVENTS_TS_SCHEMA), nanos
+
+
+def _fix_ts(df: DataFrame, nanos: bool) -> DataFrame:
+    """Floor raw int64 nanos to a microsecond timestamp (DuckDB's
+    truncation, so both engines see identical values); identity when
+    the file unit is natively readable."""
+    if nanos:
+        return df.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
+        )
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one lake table as a DataFrame (columnar parquet scan —
     column pruning and predicate pushdown reach the file scan)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = table_path(sf_dir, name)
-    if name == "events" and parquet_ts_unit(path) == "ns":
-        # TIMESTAMP(NANOS) is rejected by Spark's vectorized reader
-        # when inferring the schema (PARQUET_TYPE_ILLEGAL). Supplying
-        # the schema explicitly with ``ts long`` reads the raw nanos
-        # without touching the session-wide
-        # ``spark.sql.legacy.parquet.nanosAsLong`` conf (no leak into
-        # other readers); floor-division to microseconds matches
-        # DuckDB's truncation, so both engines see identical
-        # timestamps. SECONDS/MILLIS/MICROS need no workaround —
-        # Spark reads them natively as TimestampType.
-        df = spark.read.schema(EVENTS_RAW_SCHEMA).parquet(path)
-        return df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
     if name == "events":
+        schema, nanos = _events_read_schema(path)
+        if nanos:
+            # TIMESTAMP(NANOS) is rejected by Spark's vectorized
+            # reader when inferring the schema (PARQUET_TYPE_ILLEGAL).
+            # Supplying the schema explicitly with ``ts long`` reads
+            # the raw nanos without touching the session-wide
+            # ``spark.sql.legacy.parquet.nanosAsLong`` conf (no leak
+            # into other readers).
+            return _fix_ts(spark.read.schema(schema).parquet(path), nanos)
         # MICROS files without isAdjustedToUTC infer as timestamp_ntz;
         # the session timezone is pinned to UTC (session.py), so the
         # cast to TIMESTAMP is value-preserving and keeps one ts type

@@ -1,36 +1,49 @@
-"""Structured Streaming jobs over the events lake.
+"""Structured Streaming jobs over the lake.
 
 The reference expresses streaming concepts through Airflow
 orchestration: a ``@daily`` schedule with half-open ``[ds, next_ds)``
 windows (reference: mnt/dags/01fetch_from_database.py:42,52) and a CDC
 staging table collapsed to the newest change per key (reference:
-mnt/dags/unused_02retail_stage.py:101-144). Here both are first-class
-Structured Streaming ops:
+mnt/dags/unused_02retail_stage.py:101-144). Here every query is one
+bounded ``Trigger.AvailableNow`` drain — the exact analog of one
+catch-up DAG run: process everything available, in serialized
+micro-batches, then stop — and returns a plain batch DataFrame, so the
+driver's oracle harness hashes it like any other query. ``cdc_latest``
+is the CDC collapse as a custom stateful operator
+(``applyInPandasWithState``: per-key state holds the newest
+(ts, event_id) change, state size O(live keys)).
 
-- ``tumbling_daily``: file-source stream → event-time tumbling 1-day
-  window agg, ``Trigger.AvailableNow`` (the exact analog of one
-  catch-up DAG run: process everything available, in serialized
-  micro-batches, then stop). Complete output mode keeps every window's
-  final value in the sink; in production, append mode + a watermark
-  bounds state instead (watermark noted below).
-- ``cdc_latest``: custom stateful operator via
-  ``applyInPandasWithState`` — per-key state holds the newest
-  (ts, event_id) change seen; each micro-batch emits the keys it
-  updated (update semantics). State size = O(live keys), the scale
-  bound; emitted batches land in a parquet spool via ``foreachBatch``
-  and a final linear compaction keeps only each key's last change
-  (same comparator), so the result equals the batch latest-per-key
-  window query — which is the oracle.
+Three private helpers carry all the streaming machinery:
 
-Results return as plain batch DataFrames so the driver's oracle
-harness can hash them like any other query.
+- ``_drain`` runs every query: a fresh checkpoint, shuffle partitions
+  pinned to 8 for the run, AvailableNow to a memory table or a
+  ``foreachBatch`` callable, wait for termination.
+- ``_spool`` is the ``foreachBatch`` sink for emitted rows: each
+  micro-batch overwrites its own ``batch_id=<b>`` directory; its
+  reader returns every batch written.
+- ``_fold`` keeps a standing relation as a version chain,
+  ``v<b> = merge(v<b-1>, part)``; ``_latest`` reads the newest version.
+
+``foreachBatch`` delivers at least once: a micro-batch whose sink ran
+but whose commit did not reach the checkpoint runs again after a
+restart, under the same ``batch_id``. Every sink here is therefore
+idempotent per ``batch_id`` — a replay rewrites its own spool directory
+or chain version with the same rows — and together with the
+checkpoint's stable batch ids the drained result is exactly-once. A
+fold whose predecessor version is missing raises instead of reseeding
+from the batch alone.
+
+Sources come from ``events_stream`` (the events table as a monitored
+directory), ``_wm_events`` (the events file plus a watermark-flushing
+sentinel file) or ``_split_source`` (any relation as an n-file stream,
+one file per micro-batch). Every scratch path resolves in ``_scratch``.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,72 +51,123 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..catalog import load_table, parquet_ts_unit, table_path
+from ..catalog import (
+    _events_read_schema,
+    _fix_ts,
+    load_table,
+    parquet_ts_unit,
+    table_path,
+)
 from ..operators.aggregate import exact_sum
+from ..scratch import SCRATCH_ROOT
 
 if TYPE_CHECKING:
     import pandas as pd
-
-# When events.parquet stores ts as TIMESTAMP(NANOS) (round-1 driver
-# testdata), declaring the column as long in an explicit schema reads
-# the raw nanos without any session conf (same trick as
-# catalog.load_table), then a floor-conversion to micros yields
-# identical values to DuckDB's. Current testdata is TIMESTAMP(MICROS),
-# which Spark reads natively — the unit is sniffed per-file via
-# catalog.parquet_ts_unit, never hard-coded.
-EVENTS_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-# Native schema for SECONDS/MILLIS/MICROS files: Spark's reader
-# handles the unit conversion itself.
-EVENTS_TS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def _events_read_schema(sample_path: str) -> tuple[T.StructType, bool]:
-    """(readStream schema, needs-nanos-fix?) for an events parquet —
-    unit sniffed from the footer so the stream reader survives the
-    driver flipping the testdata's timestamp unit."""
-    nanos = parquet_ts_unit(sample_path) == "ns"
-    return (EVENTS_STREAM_SCHEMA if nanos else EVENTS_TS_SCHEMA), nanos
-
-
-def _fix_ts(df: DataFrame, nanos: bool) -> DataFrame:
-    """Floor raw int64 nanos to a proper timestamp; identity when the
-    file unit is already natively readable."""
-    if nanos:
-        return df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    return df
-
-from ..scratch import SCRATCH_ROOT
+    from pyspark.sql.streaming import StreamingQuery
 
 _SCRATCH = os.path.join(SCRATCH_ROOT, "streaming")
 
 
-def _scratch(name: str) -> str:
+def _scratch(name: str, fresh: bool = True) -> str:
+    """The one place a streaming scratch path resolves: ``name`` under
+    ``_SCRATCH``, emptied first unless ``fresh`` is False."""
     path = os.path.join(_SCRATCH, name)
-    if os.path.exists(path):
+    if fresh and os.path.exists(path):
         shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
     return path
+
+
+def _drain(
+    df: DataFrame,
+    ckpt: str,
+    *,
+    mode: str,
+    sink: Callable[[DataFrame, int], None] | None = None,
+    table: str | None = None,
+) -> StreamingQuery:
+    """Run the streaming ``df`` to completion with
+    ``Trigger.AvailableNow`` from a fresh checkpoint at scratch
+    ``ckpt``, into the ``foreachBatch`` callable ``sink`` or else the
+    memory table ``table``. Returns the finished query so callers can
+    inspect its progress.
+
+    ``spark.sql.shuffle.partitions`` is pinned to 8 for the drain. The
+    state store allocates one instance per shuffle partition; for the
+    small key spaces here that fixed cost (store init + one Python
+    worker round per partition) dominates, so the count is sized to
+    the key cardinality, not the session default. Safe because every
+    drain starts from a fresh checkpoint (the count is frozen into a
+    checkpoint once created)."""
+    spark = df.sparkSession
+    w = df.writeStream.outputMode(mode).option(
+        "checkpointLocation", _scratch(ckpt)
+    )
+    if sink is not None:
+        w = w.foreachBatch(sink)
+    else:
+        w = w.format("memory").queryName(table)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = w.trigger(availableNow=True).start()
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return q
+
+
+def _spool(
+    spark: SparkSession, name: str
+) -> tuple[Callable[[DataFrame, int], None], Callable[[], DataFrame]]:
+    """(sink, read) over a fresh scratch spool ``name``. The
+    ``foreachBatch`` sink writes each micro-batch to its own
+    ``batch_id=<b>`` directory with overwrite, so a replayed batch
+    replaces its own rows instead of duplicating them; ``read()``
+    returns every batch written so far, without the partition
+    column."""
+    root = _scratch(name)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(root, f"batch_id={batch_id}")
+        )
+
+    def read() -> DataFrame:
+        return spark.read.parquet(root).drop("batch_id")
+
+    return sink, read
+
+
+def _fold(
+    root: str,
+    batch_id: int,
+    part: DataFrame,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """Write version ``v<batch_id>`` of the chain under ``root`` and
+    return it: ``v0 = part``, ``v<b> = merge(v<b-1>, part)``. A replayed
+    batch rewrites its own version from the same predecessor, so the
+    chain lands exactly-once. A missing predecessor raises: reseeding
+    from the batch alone would silently drop every earlier batch."""
+    spark = part.sparkSession
+    if batch_id > 0:
+        prev = os.path.join(root, f"v{batch_id - 1}")
+        if not os.path.exists(prev):
+            raise FileNotFoundError(
+                f"version chain {root}: v{batch_id - 1} is missing, "
+                f"cannot fold batch {batch_id}"
+            )
+        part = merge(spark.read.parquet(prev), part)
+    out = os.path.join(root, f"v{batch_id}")
+    part.write.mode("overwrite").parquet(out)
+    return spark.read.parquet(out)
+
+
+def _latest(spark: SparkSession, root: str) -> DataFrame:
+    """The newest version of the ``_fold`` chain under ``root``."""
+    b = max(int(v[1:]) for v in os.listdir(root) if v.startswith("v"))
+    return spark.read.parquet(os.path.join(root, f"v{b}"))
 
 
 def _split_source(
@@ -113,12 +177,13 @@ def _split_source(
     name: str,
     n: int = 3,
     tagged: bool = False,
-) -> str:
+) -> DataFrame:
     """Materialize ``df`` as an ``n``-file stream source (file i =
     rows with ``key_col % n == i``) in ONE Spark job: write all
     splits via ``partitionBy`` on the split id, then move each part
     file to a stable name with an explicit, strictly increasing
-    mtime.
+    mtime. Returns the file stream over them, one file per
+    micro-batch, read with ``df``'s schema.
 
     r15 optimization + r14-advisory hardening: replaces n sequential
     ``filter().coalesce(1).write`` jobs (n source scans) with one
@@ -158,29 +223,11 @@ def _split_source(
             stamp = t0 + 10.0 * i
             os.utime(dst, (stamp, stamp))
     shutil.rmtree(tmp)
-    return src
-
-
-class _shuffle_partitions:
-    """Temporarily pin the shuffle-partition count for a streaming
-    query. The state store allocates one instance per shuffle
-    partition; for a small hot-key space that fixed cost (store init +
-    one Python worker round per partition) dominates, so stateful
-    queries pick a partition count sized to their key cardinality, not
-    the session default. Safe here because each run starts from a
-    fresh checkpoint (the count is frozen into a checkpoint once
-    created)."""
-
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark = spark
-        self.n = str(n)
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
-
-    def __exit__(self, *exc: object) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+    return (
+        spark.readStream.schema(df.drop("__t").schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
 def _stream_dir(sf_dir: str) -> str:
@@ -188,8 +235,10 @@ def _stream_dir(sf_dir: str) -> str:
     new files; expose the single events parquet through a symlinked
     scratch dir (in production the lake layout is already a directory
     per table and new files arrive in place)."""
-    d = os.path.join(_SCRATCH, "src", sf_dir.strip("/").replace("/", "_"))
-    os.makedirs(d, exist_ok=True)
+    d = _scratch(
+        os.path.join("src", sf_dir.strip("/").replace("/", "_")),
+        fresh=False,
+    )
     link = os.path.join(d, "events.parquet")
     if not os.path.exists(link):
         os.symlink(table_path(sf_dir, "events"), link)
@@ -221,32 +270,27 @@ def tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"), exact_sum("value", "sum_value"))
         .select(F.col("w.start").cast("date").alias("day"), "n_events", "sum_value")
     )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stream_tumbling_daily")
-            .outputMode("complete")
-            .option("checkpointLocation", _scratch("tumbling_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        agg, "tumbling_ckpt", mode="complete", table="stream_tumbling_daily"
+    )
     return spark.table("stream_tumbling_daily")
 
 
 SENTINEL_DAY = "2099-01-01"
 
 
-def _wm_source_dir(spark: SparkSession, sf_dir: str) -> str:
+def _wm_events(
+    spark: SparkSession, sf_dir: str
+) -> Callable[[], DataFrame]:
     """Build a 2-file stream source for the watermark demo: the real
     events file, then a single far-future sentinel event with a later
     mtime. On an unbounded stream the watermark advances as newer
     events arrive and closed windows flush naturally; for a bounded
     AvailableNow drain the sentinel plays the role of 'the next day's
     data arriving', which pushes the watermark past every real
-    window's end so append mode emits them all."""
-    import shutil
-
+    window's end so append mode emits them all. Each call of the
+    returned function opens one more reader over the source, one file
+    per micro-batch."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -273,11 +317,17 @@ def _wm_source_dir(spark: SparkSession, sf_dir: str) -> str:
     pq.write_table(tbl, sentinel)
     now = os.path.getmtime(events)
     os.utime(sentinel, (now + 100, now + 100))
-    return d
+    schema, nanos = _events_read_schema(events)
+    return lambda: _fix_ts(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d),
+        nanos,
+    )
 
 
 def _assert_sentinel_sequenced(q) -> None:
-    """The watermark-drain correctness of the ``_wm_source_dir``
+    """The watermark-drain correctness of the ``_wm_events``
     streams depends on the sentinel file arriving in a LATER
     micro-batch than the real data (file-source ordering by mtime).
     If a listing-order or mtime-granularity surprise ever delivers
@@ -311,18 +361,11 @@ def tumbling_daily_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon instead of growing with stream lifetime (complete mode,
     ``tumbling_daily``, retains every window forever).
 
-    The append-mode rows land in a parquet sink; the compacted sink
-    (minus the sentinel's own window) must equal the batch
+    The append-mode rows land in a spool; the spooled rows (minus the
+    sentinel's own window) must equal the batch
     ``window_tumbling_daily`` result — the oracle.
     """
-    src_dir = _wm_source_dir(spark, sf_dir)
-    schema, nanos = _events_read_schema(table_path(sf_dir, "events"))
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    ev = _fix_ts(raw, nanos)
+    ev = _wm_events(spark, sf_dir)()
     agg = (
         ev.withWatermark("ts", "0 seconds")
         .groupBy(F.window("ts", "1 day").alias("w"))
@@ -333,19 +376,11 @@ def tumbling_daily_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = _scratch("wm_sink")
-    with _shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch("wm_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _assert_sentinel_sequenced(q)
-    return spark.read.parquet(sink).filter(
+    sink, read = _spool(spark, "wm_sink")
+    _assert_sentinel_sequenced(
+        _drain(agg, "wm_ckpt", mode="append", sink=sink)
+    )
+    return read().filter(
         F.col("day") < F.lit(SENTINEL_DAY).cast("date")
     )
 
@@ -362,17 +397,11 @@ def stream_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     they pair up (append mode), so the bounded AvailableNow drain
     needs no horizon flush. Result ≡ the batch interval self-join
     (the oracle): (user_id, click_id, purchase_id)."""
-    src_dir = _wm_source_dir(spark, sf_dir)
-    schema, nanos = _events_read_schema(table_path(sf_dir, "events"))
+    events = _wm_events(spark, sf_dir)
 
     def side(kind: str, prefix: str) -> DataFrame:
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
         return (
-            _fix_ts(raw, nanos)
+            events()
             .filter(F.col("event_type") == kind)
             .select(
                 F.col("user_id").alias(f"{prefix}_user"),
@@ -394,23 +423,14 @@ def stream_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_id").alias("click_id"),
         F.col("p_id").alias("purchase_id"),
     )
-    sink = _scratch("funnel_sink")
-    with _shuffle_partitions(spark, 8):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch("funnel_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink, read = _spool(spark, "funnel_sink")
+    _drain(joined, "funnel_ckpt", mode="append", sink=sink)
     # No _assert_sentinel_sequenced here: inner-join matches emit
     # eagerly as rows pair up, so the result does not depend on the
     # sentinel landing in a later micro-batch (the watermark/sentinel
     # only bound join STATE, and the file source may batch both files
     # together for multi-source queries).
-    return spark.read.parquet(sink)
+    return read()
 
 
 def session_1h_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,14 +444,7 @@ def session_1h_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     every real session for the bounded AvailableNow drain; its own
     session is filtered out of the sink. Result ≡ the batch
     gaps-and-islands oracle."""
-    src_dir = _wm_source_dir(spark, sf_dir)
-    schema, nanos = _events_read_schema(table_path(sf_dir, "events"))
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    ev = _fix_ts(raw, nanos)
+    ev = _wm_events(spark, sf_dir)()
     agg = (
         ev.withWatermark("ts", "0 seconds")
         .groupBy("user_id", F.session_window("ts", "1 hour").alias("w"))
@@ -443,19 +456,11 @@ def session_1h_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = _scratch("session_sink")
-    with _shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch("session_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _assert_sentinel_sequenced(q)
-    return spark.read.parquet(sink).filter(F.col("user_id") >= 0)
+    sink, read = _spool(spark, "session_sink")
+    _assert_sentinel_sequenced(
+        _drain(agg, "session_ckpt", mode="append", sink=sink)
+    )
+    return read().filter(F.col("user_id") >= 0)
 
 
 CDC_OUTPUT_SCHEMA = T.StructType(
@@ -530,25 +535,11 @@ def cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    spool = _scratch("cdc_spool")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(spool)
-
-    with _shuffle_partitions(spark, 8):
-        q = (
-            latest.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", _scratch("cdc_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink, read = _spool(spark, "cdc_spool")
+    _drain(latest, "cdc_ckpt", mode="update", sink=sink)
     # Final compaction: several micro-batches may each have emitted a
     # key; keep the last change per key (same comparator as the state).
-    from pyspark.sql import Window
-
-    emitted = spark.read.parquet(spool)
+    emitted = read()
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
@@ -577,16 +568,9 @@ def static_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(F.count("*").alias("n_events"), exact_sum("value", "sum_value"))
     )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stream_static_join")
-            .outputMode("complete")
-            .option("checkpointLocation", _scratch("static_join_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        agg, "static_join_ckpt", mode="complete", table="stream_static_join"
+    )
     return spark.table("stream_static_join")
 
 
@@ -594,7 +578,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dropDuplicates on (user_id, event_type): exactly-once
     key emission across micro-batches (state = seen-key set; a
     watermark bounds it on unbounded streams). The deduped key stream
-    lands in a parquet spool via foreachBatch; the returned batch
+    lands in a spool via foreachBatch; the returned batch
     DataFrame counts distinct users per event type — deterministic
     regardless of which physical row the dedup kept.
     """
@@ -602,22 +586,10 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    spool = _scratch("dedup_spool")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(spool)
-
-    with _shuffle_partitions(spark, 8):
-        q = (
-            keys.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", _scratch("dedup_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink, read = _spool(spark, "dedup_spool")
+    _drain(keys, "dedup_ckpt", mode="update", sink=sink)
     return (
-        spark.read.parquet(spool)
+        read()
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"))
     )
@@ -637,16 +609,7 @@ def sliding_3d1d(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stream_sliding_3d1d")
-            .outputMode("complete")
-            .option("checkpointLocation", _scratch("sliding_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(agg, "sliding_ckpt", mode="complete", table="stream_sliding_3d1d")
     return spark.table("stream_sliding_3d1d")
 
 
@@ -655,17 +618,18 @@ def incremental_agg_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-day (n_events, decimal-sum) aggregate table kept up to date
     as micro-batches arrive. Each batch computes its OWN partial
     aggregate, which is sum-combined into the standing parquet target
-    — the additive/commutative merge makes the final table identical
-    for ANY micro-batch split of the input, so it equals the one-shot
-    batch daily aggregate (the oracle).
+    (a ``_fold`` version chain) — the additive/commutative merge makes
+    the final table identical for ANY micro-batch split of the input,
+    so it equals the one-shot batch daily aggregate (the oracle).
 
     This is the production pattern Complete-mode memory sinks only
     demo: bounded state (the view itself IS the state, no stream
-    state store), exactly-once via the checkpoint + idempotent
-    overwrite. At 100 TB the target is day-partitioned and each merge
-    rewrites only the days present in the batch (dynamic partition
-    overwrite — pipelines.py idiom); the full-table overwrite here is
-    the small-table degenerate case of that.
+    state store), exactly-once via the checkpoint + a replayed batch
+    rewriting its own version. At 100 TB the target is
+    day-partitioned and each merge rewrites only the days present in
+    the batch (dynamic partition overwrite — pipelines.py idiom); the
+    full-table rewrite per version here is the small-table degenerate
+    case of that.
 
     The input is split into 3 files streamed one per micro-batch
     (``maxFilesPerTrigger=1``) to force a genuinely incremental run.
@@ -673,13 +637,18 @@ def incremental_agg_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fix the ts unit BEFORE splitting, so the split files always carry
     # native TimestampType regardless of the source file's unit.
     raw = load_table(spark, sf_dir, "events")
-    src = _split_source(spark, raw, "event_id", "incr_src")
+    stream = _split_source(spark, raw, "event_id", "incr_src")
+    target = _scratch("incr_target")
 
-    target = os.path.join(_SCRATCH, "incr_target")
-    tmp = os.path.join(_SCRATCH, "incr_target_tmp")
-    for d in (target, tmp):
-        if os.path.exists(d):
-            shutil.rmtree(d)
+    def merge(prev: DataFrame, part: DataFrame) -> DataFrame:
+        return (
+            prev.unionByName(part)
+            .groupBy("day")
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("sum_dec").cast("decimal(18,2)").alias("sum_dec"),
+            )
+        )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         part = (
@@ -692,35 +661,10 @@ def incremental_agg_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        if os.path.exists(target):
-            part = (
-                spark.read.parquet(target)
-                .unionByName(part)
-                .groupBy("day")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_dec")
-                    .cast("decimal(18,2)")
-                    .alias("sum_dec"),
-                )
-            )
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.rename(tmp, target)
+        _fold(target, batch_id, part, merge)
 
-    stream = spark.readStream.schema(EVENTS_TS_SCHEMA).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", _scratch("incr_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(target).select(
+    _drain(stream, "incr_ckpt", mode="append", sink=merge_batch)
+    return _latest(spark, target).select(
         "day",
         "n_events",
         F.col("sum_dec").cast("double").alias("sum_value"),
@@ -737,9 +681,9 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``foreachBatch`` computes the batch's band keys (a BATCH plan —
     no streaming-agg state), emits candidate pairs against the
     standing band index (new×indexed via one band_key equi-join, plus
-    new×new within the batch), appends them to a pair spool, and
-    appends the batch's keys to the index. The index IS the state:
-    append-only parquet, one row per doc·band, queryable mid-stream —
+    new×new within the batch), spools them, and spools the batch's
+    keys into the index. The index IS the state: one parquet spool
+    directory per batch, one row per doc·band, queryable mid-stream —
     nothing is ever recomputed over the whole corpus.
 
     After the AvailableNow drain, every unordered doc pair sharing a
@@ -751,18 +695,14 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as dedup_ops
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _split_source(spark, docs, "doc_id", "mh_src")
-
-    index_dir = os.path.join(_SCRATCH, "mh_index")
-    pairs_dir = os.path.join(_SCRATCH, "mh_pairs")
-    for d in (index_dir, pairs_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
+    stream = _split_source(spark, docs, "doc_id", "mh_src")
+    index_sink, index = _spool(spark, "mh_index")
+    pairs_sink, read_pairs = _spool(spark, "mh_pairs")
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         bk = dedup_ops.minhash_bands(
             dedup_ops.doc_shingles(batch_df, distinct=False)
-        ).localCheckpoint()  # cut: feeds two joins + the index append
+        ).localCheckpoint()  # cut: feeds two joins + the index write
         a = bk.select(F.col("doc_id").alias("doc_a"), "band_key")
         b = bk.select(F.col("doc_id").alias("doc_b"), "band_key")
         pairs = (
@@ -770,8 +710,8 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b")
         )
-        if os.path.exists(index_dir):
-            idx = spark.read.parquet(index_dir).select(
+        if batch_id > 0:
+            idx = index().select(
                 F.col("doc_id").alias("doc_b"), "band_key"
             )
             cross = a.join(idx, "band_key").select(
@@ -779,24 +719,11 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.greatest("doc_a", "doc_b").alias("doc_b"),
             )
             pairs = pairs.unionByName(cross)
-        pairs.distinct().write.mode("append").parquet(pairs_dir)
-        bk.write.mode("append").parquet(index_dir)
+        pairs_sink(pairs.distinct(), batch_id)
+        index_sink(bk, batch_id)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .option("checkpointLocation", _scratch("mh_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    cands = spark.read.parquet(pairs_dir).distinct()
+    _drain(stream, "mh_ckpt", mode="append", sink=step)
+    cands = read_pairs().distinct()
     admitted = (
         cands.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
@@ -825,22 +752,10 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys = ev.select(
         "user_id", "event_type", "ts"
     ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
-    spool = _scratch("dedup_wm_spool")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(spool)
-
-    with _shuffle_partitions(spark, 8):
-        q = (
-            keys.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", _scratch("dedup_wm_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink, read = _spool(spark, "dedup_wm_spool")
+    _drain(keys, "dedup_wm_ckpt", mode="update", sink=sink)
     return (
-        spark.read.parquet(spool)
+        read()
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"))
     )
@@ -873,16 +788,7 @@ def hll_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stream_hll_rollup")
-            .outputMode("complete")
-            .option("checkpointLocation", _scratch("hll_rollup_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(agg, "hll_rollup_ckpt", mode="complete", table="stream_hll_rollup")
     return spark.table("stream_hll_rollup")
 
 
@@ -891,7 +797,7 @@ def gopher_filter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches) and each batch passes through the STATELESS Gopher
     rule table (textstats.gopher_quality) — a pure map-only filter,
     so the streaming plan needs no state store, no watermark, and no
-    shuffle; survivors append straight to the curated spool. This is
+    shuffle; survivors land straight in the curated spool. This is
     the production ingest-time quality gate: documents are scored the
     moment they land, never in a separate batch sweep.
 
@@ -902,29 +808,12 @@ def gopher_filter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import textstats
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _split_source(spark, docs, "doc_id", "gopher_src")
-    spool = _scratch("gopher_spool")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _split_source(spark, docs, "doc_id", "gopher_src")
+    sink, read = _spool(spark, "gopher_spool")
     scored = textstats.gopher_quality(stream).filter(F.col("gopher_pass"))
     out = scored.select("doc_id", "n_words", "stop_hits")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(spool)
-
-    q = (
-        out.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", _scratch("gopher_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(spool)
+    _drain(out, "gopher_ckpt", mode="append", sink=sink)
+    return read()
 
 
 def zscore_daily_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -942,46 +831,28 @@ def zscore_daily_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     z window needs the trailing days, which a per-batch stream could
     not see without unbounded state.
     """
-    raw = load_table(spark, sf_dir, "events")
-    src = _split_source(spark, raw, "event_id", "zscore_src")
+    from ..operators.aggregate import rolling_zscore_daily
 
-    target = os.path.join(_SCRATCH, "zscore_target")
-    tmp = os.path.join(_SCRATCH, "zscore_target_tmp")
-    for d in (target, tmp):
-        if os.path.exists(d):
-            shutil.rmtree(d)
+    raw = load_table(spark, sf_dir, "events")
+    stream = _split_source(spark, raw, "event_id", "zscore_src")
+    target = _scratch("zscore_target")
+
+    def merge(prev: DataFrame, part: DataFrame) -> DataFrame:
+        return (
+            prev.unionByName(part)
+            .groupBy("event_type", "day")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         part = batch_df.groupBy(
             "event_type",
             F.date_trunc("day", "ts").cast("date").alias("day"),
         ).agg(F.count("*").alias("cnt"))
-        if os.path.exists(target):
-            part = (
-                spark.read.parquet(target)
-                .unionByName(part)
-                .groupBy("event_type", "day")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.rename(tmp, target)
+        _fold(target, batch_id, part, merge)
 
-    stream = spark.readStream.schema(EVENTS_TS_SCHEMA).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", _scratch("zscore_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from ..operators.aggregate import rolling_zscore_daily
-
-    return rolling_zscore_daily(spark.read.parquet(target))
+    _drain(stream, "zscore_ckpt", mode="append", sink=merge_batch)
+    return rolling_zscore_daily(_latest(spark, target))
 
 
 def pii_redact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -999,28 +870,10 @@ def pii_redact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import textclean
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _split_source(spark, docs, "doc_id", "pii_src")
-    spool = _scratch("pii_spool")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = textclean.pii_redact(stream)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(spool)
-
-    q = (
-        out.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", _scratch("pii_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(spool)
+    stream = _split_source(spark, docs, "doc_id", "pii_src")
+    sink, read = _spool(spark, "pii_spool")
+    _drain(textclean.pii_redact(stream), "pii_ckpt", mode="append", sink=sink)
+    return read()
 
 
 def decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1049,36 +902,23 @@ def decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    src = _split_source(spark, docs, "doc_id", "decon_src")
-    spool = _scratch("decon_spool")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _split_source(spark, docs, "doc_id", "decon_src")
+    sink, read = _spool(spark, "decon_spool")
 
     # the aggregate runs INSIDE foreachBatch (batch-local, complete —
     # a doc never spans files), so the streaming plan itself carries
     # ZERO state store: the stateless-gate shape, not a running agg
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         flagged = (
             decontaminate.raw_ngrams(batch_df.filter(~is_eval), 4)
             .join(F.broadcast(ev), "ngram")
             .groupBy("doc_id")
             .agg(F.count_distinct("ngram").alias("n_hits"))
         )
-        flagged.write.mode("append").parquet(spool)
+        sink(flagged, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", _scratch("decon_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(spool)
+    _drain(stream, "decon_ckpt", mode="append", sink=step)
+    return read()
 
 
 def cms_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1099,13 +939,7 @@ def cms_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.queries_r9 import _CMS_D, _cms_bucket
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _split_source(spark, docs, "doc_id", "cms_src")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _split_source(spark, docs, "doc_id", "cms_src")
     cells = (
         stream.select(F.explode(TX.tokens("text")).alias("tok"))
         .select(
@@ -1117,16 +951,7 @@ def cms_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = cells.groupBy("r", "bucket").agg(
         F.count("*").alias("counter")
     )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("stream_cms_rollup")
-            .outputMode("complete")
-            .option("checkpointLocation", _scratch("cms_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(agg, "cms_ckpt", mode="complete", table="stream_cms_rollup")
     return spark.table("stream_cms_rollup").select(
         F.col("r").cast("long").alias("r"),
         "bucket",
@@ -1141,9 +966,9 @@ def payload_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Documents arrive as a 3-file stream. Each ``foreachBatch``
     shingles ONLY the batch (stride-1 byte 8-grams over the binary
-    payload), emits candidate pairs (new x indexed plus new x new via
-    one gram equi-join), and appends the batch's grams to the
-    standing index. The join is admission-capped by the gram's
+    payload), spools the batch's grams into the standing index, and
+    emits candidate pairs (new x indexed plus new x new via one gram
+    equi-join). The join is admission-capped by the gram's
     CURRENT document frequency (standing + batch): df only grows, so
     a gram over the cap now can never be rare in the final corpus —
     pruning is sound — while a gram under the cap now might exceed it
@@ -1162,14 +987,10 @@ def payload_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     j_min = 0.5
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _split_source(spark, docs, "doc_id", "payload_src")
-
-    index_dir = os.path.join(_SCRATCH, "payload_gram_index")
-    pairs_dir = os.path.join(_SCRATCH, "payload_cand_pairs")
-    df_dir = os.path.join(_SCRATCH, "payload_gram_df")
-    for d in (index_dir, pairs_dir, df_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
+    stream = _split_source(spark, docs, "doc_id", "payload_src")
+    index_sink, index = _spool(spark, "payload_gram_index")
+    pairs_sink, read_pairs = _spool(spark, "payload_cand_pairs")
+    df_root = _scratch("payload_gram_df")
 
     def _grams(batch: DataFrame) -> DataFrame:
         # r15 optimization: the int64-packing gram kernel (bijective
@@ -1184,15 +1005,20 @@ def payload_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return multimodal.payload_grams(b)
 
+    def merge_df(prev: DataFrame, bcnt: DataFrame) -> DataFrame:
+        return (
+            prev.unionByName(bcnt)
+            .groupBy("g")
+            .agg(F.sum("df").alias("df"))
+        )
+
     def step(batch_df: DataFrame, batch_id: int) -> None:
         bg = _grams(batch_df).localCheckpoint()  # feeds publish + joins
-        # r16 (guide §2.4): publish the batch's grams FIRST, into a
-        # batch-id-keyed partition (a replayed batch OVERWRITES its
-        # own dir — strictly safer than the old blind append, whose
-        # replay safety depended on append-last ordering). The index
-        # read below then already contains THIS batch, so the old
-        # new×new self-join folds into the single index join: the
-        # under-cap condition rides the join key g via the admitted
+        # r16 (guide §2.4): publish the batch's grams FIRST, into its
+        # spool directory (a replayed batch OVERWRITES its own dir).
+        # The index read below then already contains THIS batch, so
+        # the old new×new self-join folds into the single index join:
+        # the under-cap condition rides the join key g via the admitted
         # side, making right-side filtering redundant — pair sets are
         # identical (least/greatest + the per-batch distinct dedup
         # the doubled direction), and one join + one union + one
@@ -1202,15 +1028,13 @@ def payload_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch-present grams via a semi-join was tried and REVERTED
         # — without a broadcastable batch-gram set it adds a distinct
         # + an extra index pass for the same shuffle bytes.)
-        bg.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"b{batch_id}")
-        )
-        idx_all = spark.read.parquet(os.path.join(index_dir, "b*"))
+        index_sink(bg, batch_id)
+        idx_all = index()
         # r16 (VERDICT item 6, now measured VIABLE): the corpus is
         # repetition-dominated (sf0.1: 1,351,090 index rows but only
         # 13,005 distinct grams — ratio 0.0096), so the per-batch df
         # recount over the whole index is ~100× larger than the
-        # standing (g, df) relation. Maintain df as a batch-id-keyed
+        # standing (g, df) relation. Maintain df as a ``_fold``
         # VERSION CHAIN instead: v{b} = merge(v{b-1}, batch counts) —
         # exact integer sums, so v{b} ≡ groupBy over the index after
         # batch b, and a replayed batch deterministically rewrites
@@ -1218,55 +1042,29 @@ def payload_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch the shuffle ships ≤|distinct grams| partial-agged
         # rows instead of the full index.
         bcnt = bg.groupBy("g").agg(F.count("*").alias("df"))
-        prev_df = os.path.join(df_dir, f"v{batch_id - 1}")
-        if batch_id == 0 or not os.path.exists(prev_df):
-            merged = bcnt
-        else:
-            merged = (
-                spark.read.parquet(prev_df)
-                .unionByName(bcnt)
-                .groupBy("g")
-                .agg(F.sum("df").alias("df"))
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(df_dir, f"v{batch_id}")
-        )
         df_now = (
-            spark.read.parquet(os.path.join(df_dir, f"v{batch_id}"))
+            _fold(df_root, batch_id, bcnt, merge_df)
             .filter(F.col("df") <= df_cap)
             .select("g")
         )
         a = bg.join(df_now, "g")
-        (
+        pairs_sink(
             a.join(idx_all.withColumnRenamed("doc_id", "doc_b"), "g")
             .filter(F.col("doc_id") != F.col("doc_b"))
             .select(
                 F.least("doc_id", "doc_b").alias("doc_a"),
                 F.greatest("doc_id", "doc_b").alias("doc_b"),
             )
-            .distinct()
-            .write.mode("append")
-            .parquet(pairs_dir)
+            .distinct(),
+            batch_id,
         )
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .option("checkpointLocation", _scratch("payload_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(stream, "payload_ckpt", mode="append", sink=step)
 
     # verify OFF THE INDEX: final rarity + exact Jaccard over the
     # admitted pairs' rare-gram sets — the corpus text is never
     # re-shingled
-    idx = spark.read.parquet(os.path.join(index_dir, "b*"))
+    idx = index()
     rare = (
         idx.groupBy("g")
         .agg(F.count("*").alias("df"))
@@ -1275,7 +1073,7 @@ def payload_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rgrams = idx.join(rare, "g").localCheckpoint(eager=False)
     sz = rgrams.groupBy("doc_id").agg(F.count("*").alias("n"))
-    cands = spark.read.parquet(pairs_dir).distinct()
+    cands = read_pairs().distinct()
     inter = (
         cands.join(
             rgrams.withColumnRenamed("doc_id", "doc_a"), "doc_a"
@@ -1316,7 +1114,7 @@ def dq_constraints_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     and price-range rules (stateless map-side counters) and
     referential integrity against the STATIC customer dimension (the
     stream-static LEFT join, the shape a production DQ monitor uses to
-    catch orphan keys at ingest) — and appends one counter row.
+    catch orphan keys at ingest) — and spools one counter row.
     Violation/total counts are associative, so the published report is
     the exact column-sum of the batch counters: after the drain it
     equals the batch suite restricted to orders, and that SQL oracle
@@ -1327,17 +1125,15 @@ def dq_constraints_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is three integers per check.
     """
     orders = load_table(spark, sf_dir, "orders")
-    src = _split_source(spark, orders, "o_orderkey", "dq_src")
+    stream = _split_source(spark, orders, "o_orderkey", "dq_src")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    counters_dir = os.path.join(_SCRATCH, "dq_counters")
-    if os.path.exists(counters_dir):
-        shutil.rmtree(counters_dir)
+    sink, _ = _spool(spark, "dq_counters")
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         j = batch_df.join(
             cust, batch_df["o_custkey"] == cust["c_custkey"], "left"
         )
-        j.agg(
+        counters = j.agg(
             F.sum(
                 F.when(
                     ~F.col("o_orderstatus").isin("O", "F", "P"), 1
@@ -1356,34 +1152,16 @@ def dq_constraints_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("fk_miss"),
             F.count("*").cast("bigint").alias("n"),
-        ).write.mode("overwrite").parquet(
-            # foreachBatch is at-least-once: a replayed micro-batch
-            # must land idempotently, so each batch OWNS a
-            # batch_id-keyed partition dir and overwrites it on retry
-            # instead of appending a double-count (r12-advisory fix).
-            os.path.join(counters_dir, f"batch_id={batch_id}")
         )
+        sink(counters, batch_id)
 
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .option("checkpointLocation", _scratch("dq_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    return _dq_publish(spark, counters_dir)
+    _drain(stream, "dq_ckpt", mode="append", sink=step)
+    return _dq_publish(spark, _scratch("dq_counters", fresh=False))
 
 
 def _dq_publish(spark: SparkSession, counters_dir: str) -> DataFrame:
     """Publish step of ``dq_constraints_stream``: column-sum the
-    batch_id-partitioned counter partials into the report. Module-level
+    batch_id-partitioned counter spool into the report. Module-level
     (not a closure) so the replay-idempotence test can re-publish after
     simulating an at-least-once foreachBatch replay
     (tests/test_streaming_restart.py, r13-verdict item 3)."""
@@ -1418,8 +1196,8 @@ def feature_snapshot_stream(
     Orders arrive as a 3-file AvailableNow stream; each micro-batch
     reduces to PARTIAL per-customer aggregates (window counts, 90-day
     revenue cents, min/max order date — every feature either a sum or
-    a min/max, i.e. associative and mergeable), appended to a compact
-    partials store. Publishing = one merge rollup of the partials:
+    a min/max, i.e. associative and mergeable), spooled per batch into
+    a compact partials store. Publishing = one merge rollup of the partials:
     sums of sums, min of mins, max of maxes, then the derived
     recency/tenure columns. After the drain the snapshot equals the
     batch query bit for bit, so the batch oracle applies verbatim.
@@ -1432,15 +1210,13 @@ def feature_snapshot_stream(
     state never rescans history.
     """
     orders = load_table(spark, sf_dir, "orders")
-    src = _split_source(spark, orders, "o_orderkey", "feat_src")
+    stream = _split_source(spark, orders, "o_orderkey", "feat_src")
     cutoff = orders.agg(
         F.date_sub(
             F.max(F.col("o_orderdate").cast("date")), 90
         ).alias("c")
     )
-    partials_dir = os.path.join(_SCRATCH, "feat_partials")
-    if os.path.exists(partials_dir):
-        shutil.rmtree(partials_dir)
+    sink, _ = _spool(spark, "feat_partials")
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         pit = (
@@ -1453,7 +1229,7 @@ def feature_snapshot_stream(
                 F.col("d") > F.date_sub(F.col("c"), days), 1
             ).otherwise(0)
         ).cast("bigint")
-        pit.groupBy("o_custkey").agg(
+        partials = pit.groupBy("o_custkey").agg(
             win(30).alias("c30"),
             win(90).alias("c90"),
             win(365).alias("c365"),
@@ -1466,28 +1242,13 @@ def feature_snapshot_stream(
             F.min("d").alias("mind"),
             F.max("d").alias("maxd"),
             F.count("*").cast("bigint").alias("cnt"),
-        ).write.mode("overwrite").parquet(
-            # idempotent under foreachBatch's at-least-once replay:
-            # per-batch partition dir, overwritten on retry
-            # (r12-advisory fix, same as dq_constraints_stream)
-            os.path.join(partials_dir, f"batch_id={batch_id}")
         )
+        sink(partials, batch_id)
 
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    _drain(stream, "feat_ckpt", mode="append", sink=step)
+    return _feat_merge(
+        spark, _scratch("feat_partials", fresh=False), cutoff
     )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .option("checkpointLocation", _scratch("feat_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    return _feat_merge(spark, partials_dir, cutoff)
 
 
 def _feat_merge(
@@ -1550,10 +1311,8 @@ def curriculum_pacing_stream(
     from ..plans.queries_r13 import _CURR_PHASES
 
     docs = load_table(spark, sf_dir, "documents")
-    src = _split_source(spark, docs, "doc_id", "curr_src")
-    partials_dir = os.path.join(_SCRATCH, "curr_partials")
-    if os.path.exists(partials_dir):
-        shutil.rmtree(partials_dir)
+    stream = _split_source(spark, docs, "doc_id", "curr_src")
+    sink, read = _spool(spark, "curr_partials")
 
     t = F.trim(F.col("text"))
     diff_expr = (
@@ -1568,29 +1327,15 @@ def curriculum_pacing_stream(
     )
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(diff_expr).groupBy("d").agg(
+        partials = batch_df.select(diff_expr).groupBy("d").agg(
             F.count("*").cast("bigint").alias("cnt"),
             F.sum("d").cast("bigint").alias("dtok"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(partials_dir, f"batch_id={batch_id}")
         )
+        sink(partials, batch_id)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .option("checkpointLocation", _scratch("curr_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    _drain(stream, "curr_ckpt", mode="append", sink=step)
     vals = (
-        spark.read.parquet(partials_dir)
+        read()
         .groupBy("d")
         .agg(
             F.sum("cnt").cast("bigint").alias("cnt"),
@@ -1644,7 +1389,7 @@ def scd2_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval build from the full log bit for bit — the lead window's
     answer — so that SQL oracle applies verbatim.
 
-    Fault tolerance: the dimension is a batch_id-keyed VERSION CHAIN
+    Fault tolerance: the dimension is a ``_fold`` VERSION CHAIN
     (``v{batch_id}`` reads ``v{batch_id - 1}``); a replayed microbatch
     deterministically rewrites its own version, so foreachBatch's
     at-least-once delivery lands exactly-once (same contract as
@@ -1683,11 +1428,29 @@ def scd2_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(ranges[1], F.lit(1))
         .otherwise(F.lit(2))
     )
-    src = _split_source(spark, typed, tercile, "scd2_src")
+    stream = _split_source(spark, typed, tercile, "scd2_src")
+    dim_root = _scratch("scd2_dim")
 
-    dim_root = os.path.join(_SCRATCH, "scd2_dim")
-    if os.path.exists(dim_root):
-        shutil.rmtree(dim_root)
+    def merge(prev: DataFrame, mini: DataFrame) -> DataFrame:
+        first_change = mini.groupBy("o_custkey").agg(
+            F.min("valid_from").alias("close_at")
+        )
+        cur = prev.filter("is_current")
+        closed = cur.join(first_change, "o_custkey").select(
+            "o_custkey",
+            "o_orderkey",
+            "o_totalprice",
+            "valid_from",
+            F.col("close_at").alias("valid_to"),
+            F.lit(False).alias("is_current"),
+        )
+        untouched_cur = cur.join(first_change, "o_custkey", "left_anti")
+        history = prev.filter(~F.col("is_current"))
+        return (
+            history.unionByName(closed)
+            .unionByName(untouched_cur)
+            .unionByName(mini)
+        )
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         w = Window.partitionBy("o_custkey").orderBy("d", "o_orderkey")
@@ -1700,56 +1463,10 @@ def scd2_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             nxt.alias("valid_to"),
             nxt.isNull().alias("is_current"),
         )
-        first_change = batch_df.groupBy("o_custkey").agg(
-            F.min("d").alias("close_at")
-        )
-        prev_dir = os.path.join(dim_root, f"v{batch_id - 1}")
-        if batch_id == 0 or not os.path.exists(prev_dir):
-            dim = mini
-        else:
-            prev = spark.read.parquet(prev_dir)
-            cur = prev.filter("is_current")
-            closed = cur.join(first_change, "o_custkey").select(
-                "o_custkey",
-                "o_orderkey",
-                "o_totalprice",
-                "valid_from",
-                F.col("close_at").alias("valid_to"),
-                F.lit(False).alias("is_current"),
-            )
-            untouched_cur = cur.join(
-                first_change, "o_custkey", "left_anti"
-            )
-            history = prev.filter(~F.col("is_current"))
-            dim = (
-                history.unionByName(closed)
-                .unionByName(untouched_cur)
-                .unionByName(mini)
-            )
-        dim.write.mode("overwrite").parquet(
-            os.path.join(dim_root, f"v{batch_id}")
-        )
+        _fold(dim_root, batch_id, mini, merge)
 
-    stream = (
-        spark.readStream.schema(typed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .option("checkpointLocation", _scratch("scd2_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    versions = sorted(
-        int(v[1:]) for v in os.listdir(dim_root) if v.startswith("v")
-    )
-    final = spark.read.parquet(
-        os.path.join(dim_root, f"v{versions[-1]}")
-    )
+    _drain(stream, "scd2_ckpt", mode="append", sink=step)
+    final = _latest(spark, dim_root)
     # validity bounds surface as nullable TIMESTAMP_NTZ with NULL on
     # the open interval (FIXTURES.md F6 r16: the scd2_intervals shape
     # — o_orderdate is parquet timestamp[us], so that query's green
@@ -1781,7 +1498,7 @@ def ivm_agg_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     INVARIANT (unlike scd2_apply_stream, no mtime pinning is needed:
     any batch interleaving converges to the same aggregate).
 
-    Fault tolerance: the standing aggregate is a batch_id-keyed
+    Fault tolerance: the standing aggregate is a ``_fold``
     VERSION CHAIN (``v{batch_id}`` reads ``v{batch_id - 1}``), so
     foreachBatch's at-least-once replay lands exactly-once — the same
     contract as scd2_apply_stream / dq_constraints_stream.
@@ -1847,12 +1564,19 @@ def ivm_agg_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sign"),
         "__t",
     )
-    schema = out.drop("__t").schema
-    src = _split_source(spark, out, "__t", "ivm_src", tagged=True)
+    stream = _split_source(spark, out, "__t", "ivm_src", tagged=True)
+    agg_root = _scratch("ivm_agg")
 
-    agg_root = os.path.join(_SCRATCH, "ivm_agg")
-    if os.path.exists(agg_root):
-        shutil.rmtree(agg_root)
+    def merge(prev: DataFrame, part: DataFrame) -> DataFrame:
+        return (
+            prev.unionByName(part)
+            .groupBy("l_returnflag", "l_linestatus")
+            .agg(
+                F.sum("p_qty").cast("decimal(18,2)").alias("p_qty"),
+                F.sum("p_price").cast("decimal(18,2)").alias("p_price"),
+                F.sum("p_n").cast("bigint").alias("p_n"),
+            )
+        )
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         part = batch_df.groupBy("l_returnflag", "l_linestatus").agg(
@@ -1864,37 +1588,10 @@ def ivm_agg_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("p_price"),
             F.sum("sign").cast("bigint").alias("p_n"),
         )
-        prev_dir = os.path.join(agg_root, f"v{batch_id - 1}")
-        if batch_id > 0 and os.path.exists(prev_dir):
-            part = spark.read.parquet(prev_dir).unionByName(part)
-        merged = part.groupBy("l_returnflag", "l_linestatus").agg(
-            F.sum("p_qty").cast("decimal(18,2)").alias("p_qty"),
-            F.sum("p_price").cast("decimal(18,2)").alias("p_price"),
-            F.sum("p_n").cast("bigint").alias("p_n"),
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(agg_root, f"v{batch_id}")
-        )
+        _fold(agg_root, batch_id, part, merge)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.writeStream.foreachBatch(step)
-            .option("checkpointLocation", _scratch("ivm_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    versions = sorted(
-        int(v[1:]) for v in os.listdir(agg_root) if v.startswith("v")
-    )
-    final = spark.read.parquet(os.path.join(agg_root, f"v{versions[-1]}"))
-    return final.select(
+    _drain(stream, "ivm_ckpt", mode="append", sink=step)
+    return _latest(spark, agg_root).select(
         "l_returnflag",
         "l_linestatus",
         F.col("p_qty").cast("double").alias("sum_qty"),

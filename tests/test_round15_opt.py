@@ -268,7 +268,8 @@ def test_ivm_tagged_split_matches_sequential_batches(spark):
         ),
         "__t",
     )
-    src = SJ._split_source(spark, out, "__t", "ivm_src_test", tagged=True)
+    SJ._split_source(spark, out, "__t", "ivm_src_test", tagged=True)
+    src = os.path.join(SJ._SCRATCH, "ivm_src_test")
     files = sorted(os.listdir(src))
     assert len(files) == 3, files
     mtimes = [os.path.getmtime(os.path.join(src, f)) for f in files]

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from .conftest import SF_SMOKE
@@ -196,3 +197,49 @@ def test_feature_snapshot_replay_still_matches_batch_oracle(spark):
         registry.ORACLES["stream_feature_snapshot"],
         "stream_feature_snapshot+replay",
     )
+
+
+def test_spool_and_fold_absorb_a_replayed_batch(spark, tmp_path, monkeypatch):
+    """The two idempotent-per-batch_id sinks every streaming job writes
+    through: replaying a batch_id into a ``_spool`` sink must not
+    duplicate a row, refolding a batch into a ``_fold`` chain must
+    rewrite an identical version, and a fold whose predecessor version
+    is missing must raise instead of reseeding from the batch alone."""
+    from data_pipeline_postgres_spark.streaming import jobs
+
+    monkeypatch.setattr(jobs, "_SCRATCH", str(tmp_path))
+
+    def keys(lo: int, hi: int):
+        return spark.range(lo, hi).select(F.col("id").alias("k"))
+
+    sink, read = jobs._spool(spark, "replay_spool")
+    sink(keys(0, 10), 0)
+    sink(keys(10, 15), 1)
+    sink(keys(10, 15), 1)  # at-least-once replay of batch 1
+    got = sorted(r.k for r in read().collect())
+    assert got == list(range(15))
+    assert read().columns == ["k"]
+
+    def counts(lo: int, hi: int):
+        return spark.range(lo, hi).select(
+            (F.col("id") % 3).alias("k"), F.lit(1).cast("bigint").alias("n")
+        )
+
+    def merge(prev, part):
+        return (
+            prev.unionByName(part).groupBy("k").agg(F.sum("n").alias("n"))
+        )
+
+    root = str(tmp_path / "chain")
+    jobs._fold(root, 0, counts(0, 6), merge)
+
+    def fold_batch_1():
+        v1 = jobs._fold(root, 1, counts(6, 9), merge)
+        return sorted(map(tuple, v1.collect()))
+
+    v1 = fold_batch_1()
+    assert fold_batch_1() == v1 == [(0, 3), (1, 3), (2, 3)]
+    assert sorted(map(tuple, jobs._latest(spark, root).collect())) == v1
+
+    with pytest.raises(FileNotFoundError, match="v0 is missing"):
+        jobs._fold(str(tmp_path / "no_v0"), 1, counts(0, 3), merge)

@@ -83,19 +83,19 @@ def test_events_ts_is_timestamp_type(spark):
 def test_streaming_schema_matches_file_unit():
     """The streaming reader must pick the raw-long schema ONLY for
     nanos files; for everything else the native timestamp schema."""
-    from data_pipeline_postgres_spark.catalog import table_path
-    from data_pipeline_postgres_spark.streaming.jobs import (
-        EVENTS_STREAM_SCHEMA,
+    from data_pipeline_postgres_spark.catalog import (
+        EVENTS_RAW_SCHEMA,
         EVENTS_TS_SCHEMA,
         _events_read_schema,
+        parquet_ts_unit,
+        table_path,
     )
-    from data_pipeline_postgres_spark.catalog import parquet_ts_unit
 
     path = table_path(SF_SMOKE, "events")
     schema, nanos = _events_read_schema(path)
     unit = parquet_ts_unit(path)
     if unit == "ns":
-        assert nanos and schema == EVENTS_STREAM_SCHEMA
+        assert nanos and schema == EVENTS_RAW_SCHEMA
     else:
         assert not nanos and schema == EVENTS_TS_SCHEMA
 
