@@ -306,7 +306,28 @@ EXT_HEADLINE = [
 ]
 
 
+def round_override() -> int | None:
+    """The archive round forced by ``SPARK_GRAFT_BENCH_ROUND``, or None
+    when it is unset. Anything but a positive integer exits with a
+    message naming the variable, before any query runs (a typo used
+    to surface as a bare ValueError after the whole bench, and ``0``
+    archived a round 0)."""
+    raw = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
+    if not raw:
+        return None
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise SystemExit(
+            f"SPARK_GRAFT_BENCH_ROUND must be a positive integer, got {raw!r}"
+        )
+    return n
+
+
 def main() -> None:
+    env_round = round_override()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="bench")
@@ -384,10 +405,7 @@ def main() -> None:
         for p in _glob.glob(os.path.join(root, "BENCH_*r*.json"))
         if (m := _re.search(r"BENCH_(?:DETAIL_)?r(\d+)\.json$", p))
     ]
-    env_round = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    this_round = (
-        int(env_round) if env_round else (max(rounds) if rounds else 0) + 1
-    )
+    this_round = env_round or (max(rounds) if rounds else 0) + 1
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     archive = os.path.join(
         root, f"BENCH_DETAIL_r{this_round:02d}_c{cpus}.json"

@@ -13,7 +13,10 @@ reference's ``replace=True`` idempotency per partition for free; the
 day filter prunes to the single partition on re-reads (asserted in
 tests). The streaming variant replaces the ExternalTaskSensor poll
 loop: the file source discovers new day files and ``AvailableNow``
-drains them in order.
+drains them in order. Both zones are read under their declared
+``schemas`` types (``PRODUCT_DEMAND`` raw, ``MATERIAL_DEMAND``
+transformed), never inferred: an inferring read runs a Spark job on
+every day-run.
 
 Metamorphic contracts (tests/test_pipelines.py):
 - re-running a day changes nothing (idempotence);
@@ -31,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans.flagship import material_demand, product_demand_view
+from .schemas import MATERIAL_DEMAND, PRODUCT_DEMAND
 
 
 def raw_path(work_dir: str) -> str:
@@ -72,8 +76,10 @@ def transform_day(spark: SparkSession, work_dir: str, ds: str) -> None:
     """DAG-02 analog: read ONE raw day partition (pruned scan),
     run the material-demand transform, overwrite that day's
     transformed partition."""
-    raw = spark.read.parquet(raw_path(work_dir)).filter(
-        F.col("date") == F.lit(ds).cast("date")
+    raw = (
+        spark.read.schema(PRODUCT_DEMAND)
+        .parquet(raw_path(work_dir))
+        .filter(F.col("date") == F.lit(ds).cast("date"))
     )
     out = material_demand(raw)
     (
@@ -93,13 +99,18 @@ def load_warehouse(
     overwrite save of the transformed zone into a catalog table.
     With a JDBC URL this becomes ``df.write.jdbc(..., batchsize)``
     (sources/jdbc.py); file-backed here so tests stay hermetic."""
-    df = spark.read.parquet(transformed_path(work_dir)).select(
-        # canonical column order (partitioned read-back appends the
-        # partition column; the warehouse contract puts date first)
-        "date",
-        "shop_id",
-        "raw_material",
-        "demand_kg",
+    df = (
+        spark.read.schema(MATERIAL_DEMAND)
+        .parquet(transformed_path(work_dir))
+        .select(
+            # canonical column order (partitioned read-back appends
+            # the partition column; the warehouse contract puts date
+            # first)
+            "date",
+            "shop_id",
+            "raw_material",
+            "demand_kg",
+        )
     )
     df.createOrReplaceTempView(table)
     return df
@@ -127,9 +138,8 @@ def transform_stream(
     Emits the same (date, shop_id, raw_material, demand_kg) rows as
     the batch transform over the whole raw zone.
     """
-    raw_schema = spark.read.parquet(raw_path(work_dir)).schema
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(PRODUCT_DEMAND)
         .option("basePath", raw_path(work_dir))
         .parquet(os.path.join(raw_path(work_dir), "*"))
     )

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..functions import text as TX
@@ -2086,13 +2087,22 @@ def q_sim_ivf_nprobe_recall_curve(
 # Tarau 2004) ranks words by centrality in the adjacency
 # co-occurrence graph — the graph-global complement to RAKE's
 # degree/frequency heuristic (text_rake_keywords). Node set bounded
-# to the top-200 vocabulary so the graph is constant-size at any
-# corpus scale; the 8 quantized supersteps reuse the
-# graph_pagerank_copurchase machinery verbatim (operators/graph.py
-# pagerank, quantize_bits=30 → order-free exact contribution sums).
+# to the top-200 vocabulary, so the graph (at most 200 nodes and
+# 200·199 edges) is constant-size at any corpus scale: Spark counts
+# the bigrams, and the 8 quantized supersteps run on the driver
+# (operators/graph.pagerank_bounded — bit-identical to
+# graph.pagerank's quantize_bits=30 supersteps, same oracle step SQL
+# as graph_pagerank_copurchase).
 
 _TEXTRANK_VOCAB = 200
 _TEXTRANK_TOPK = 30
+_TEXTRANK_SCHEMA = T.StructType(
+    [
+        T.StructField("word", T.StringType()),
+        T.StructField("rank", T.DoubleType()),
+        T.StructField("n_neighbors", T.LongType(), False),
+    ]
+)
 
 
 def _textrank_oracle() -> str:
@@ -2144,31 +2154,18 @@ ORDER BY rank DESC, word LIMIT {_TEXTRANK_TOPK}
 """
 
 
-@query("text_textrank_keywords", _textrank_oracle())
-def q_text_textrank_keywords(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TextRank corpus keywords: PageRank centrality over the
-    word-adjacency co-occurrence graph, node set bounded to the
-    top-200 vocabulary → the 30 most central words (word, rank,
-    n_neighbors). The graph-global keyword extractor next to RAKE's
-    local degree heuristic: a word ranks high when its NEIGHBORS are
-    central, not merely when it is frequent.
+def _textrank_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(a, b, c): how often word ``a`` is directly followed by a
+    different word ``b``, both in the top-``_TEXTRANK_VOCAB``
+    vocabulary — at most vocab² rows at any corpus scale.
 
-    Scale shape: the vocabulary cut is a TakeOrderedAndProject over
-    token counts; edges filter the bigram stream through the
-    broadcast vocab BEFORE any exchange, and the graph itself is
-    constant-size (≤ vocab² edges) at any corpus scale — the 8
-    synchronous supersteps run on that bounded relation with
-    broadcast ranks. Hash-exact across engines via the
-    quantize_bits=30 binary-fixed-point contract
-    (operators/graph.pagerank — same machinery, same oracle step SQL
-    as graph_pagerank_copurchase).
-    """
+    The vocabulary cut is a TakeOrderedAndProject over token counts;
+    the bigram stream is filtered through the broadcast vocab BEFORE
+    any exchange, and the ORDERED pairs are counted in one pass over
+    the exploded stream (guide §2.3 partial aggregation)."""
     from ..catalog import spread_scan
-    from ..operators import graph
 
-    # r15: spread the single-row-group scan before the token/bigram
+    # spread the single-row-group scan before the token/bigram
     # explodes (guide §2.5; no-op at scale — see catalog.spread_scan).
     docs = spread_scan(_docs(spark, sf_dir), "doc_id")
     toks = TX.tokens("text")
@@ -2194,49 +2191,74 @@ def q_text_textrank_keywords(
     ).join(
         F.broadcast(vocab.withColumnRenamed("t", "b")), "b", "left_semi"
     )
-    # r15 (guide §2.3 partial aggregation): count the ORDERED bigram
-    # pairs first (one pass over the exploded stream), then symmetrize
-    # the counted <=vocab^2-row relation. The previous form unioned the
-    # raw bigram stream with its swap, so the explode + two vocab
-    # semi-joins executed twice; the checkpoint pins the tiny counts so
-    # the pw->ow self-reference does not re-run the stream either.
-    # count(sym rows) == sum of ordered counts over both directions,
-    # so weights are exactly unchanged. A/B: 7.7 -> 3.1 s median.
-    pc = (
-        bgv.groupBy("a", "b")
-        .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+    return bgv.groupBy("a", "b").agg(F.count("*").alias("c"))
+
+
+def _textrank_edges(
+    counts: list[tuple[str, str, int]],
+) -> tuple[list[tuple[str, str, float]], dict[str, int]]:
+    """The oracle's weighted co-occurrence graph from the ordered
+    bigram counts: edges (src, dst, p) with the symmetric weight
+    w = c(src, dst) + c(dst, src) and p = w / Σ_dst w, plus each
+    node's n_neighbors. Weights are integers, so every sum is exact
+    and p is the same IEEE quotient the oracle's window divides."""
+    weight: dict[tuple[str, str], int] = {}
+    for a, b, c in counts:
+        weight[a, b] = weight.get((a, b), 0) + c
+        weight[b, a] = weight.get((b, a), 0) + c
+    out_w: dict[str, int] = {}
+    degree: dict[str, int] = {}
+    for (src, _), w in weight.items():
+        out_w[src] = out_w.get(src, 0) + w
+        degree[src] = degree.get(src, 0) + 1
+    edges = [
+        (src, dst, float(w) / float(out_w[src]))
+        for (src, dst), w in weight.items()
+    ]
+    return edges, degree
+
+
+@query("text_textrank_keywords", _textrank_oracle())
+def q_text_textrank_keywords(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """TextRank corpus keywords: PageRank centrality over the
+    word-adjacency co-occurrence graph, node set bounded to the
+    top-200 vocabulary → the 30 most central words (word, rank,
+    n_neighbors). The graph-global keyword extractor next to RAKE's
+    local degree heuristic: a word ranks high when its NEIGHBORS are
+    central, not merely when it is frequent.
+
+    Scale shape: the corpus-sized work — tokenize, vocabulary cut,
+    bigram count — is one Spark action whose result is bounded by
+    vocab² rows at any corpus scale. The graph built from it has at
+    most 200 nodes, so the 8 synchronous supersteps run as a numpy
+    power iteration on the driver (operators/graph.pagerank_bounded)
+    instead of 8 rounds of Spark stages, whose per-job latency was
+    most of this query's time. Hash-exact across engines via the
+    quantize_bits=30 binary-fixed-point contract (same arithmetic as
+    operators/graph.pagerank, same oracle step SQL as
+    graph_pagerank_copurchase). The result is a local relation built
+    from Arrow, so no Python worker starts.
+    """
+    import pyarrow as pa
+
+    from ..operators import graph
+
+    counts = _textrank_bigram_counts(spark, sf_dir).collect()
+    edges, degree = _textrank_edges(counts)
+    ranks = graph.pagerank_bounded(edges)
+    by_rank = sorted(ranks.items(), key=lambda wr: (-wr[1], wr[0]))
+    top = by_rank[:_TEXTRANK_TOPK]
+    table = pa.table(
+        [
+            pa.array([w for w, _ in top], pa.string()),
+            pa.array([r for _, r in top], pa.float64()),
+            pa.array([degree[w] for w, _ in top], pa.int64()),
+        ],
+        names=_TEXTRANK_SCHEMA.names,
     )
-    sym = pc.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "c"
-    ).unionByName(
-        pc.select(
-            F.col("b").alias("src"), F.col("a").alias("dst"), "c"
-        )
-    )
-    pw = sym.groupBy("src", "dst").agg(
-        F.sum("c").cast("double").alias("weight")
-    )
-    ow = pw.groupBy(F.col("src").alias("_s")).agg(
-        F.sum("weight").alias("outw")
-    )
-    edges = pw.join(ow, pw["src"] == ow["_s"]).select(
-        "src",
-        "dst",
-        "weight",
-        (F.col("weight") / F.col("outw")).alias("p"),
-    )
-    edges = edges.localCheckpoint(eager=False)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("bigint").alias("n_neighbors")
-    )
-    return (
-        graph.pagerank(edges, prenormalized=True, quantize_bits=30)
-        .join(deg, "node")
-        .select(F.col("node").alias("word"), "rank", "n_neighbors")
-        .orderBy(F.desc("rank"), F.asc("word"))
-        .limit(_TEXTRANK_TOPK)
-    )
+    return spark.createDataFrame(table, _TEXTRANK_SCHEMA)
 
 
 # -- As-of join with tolerance ------------------------------------------------

@@ -33,7 +33,8 @@ def stored_index(spark, sf_dir, table, name, filename, build):
     source-table ``st_mtime_ns``), so a regenerated testdata dir gets
     a fresh tag and the index REBUILDS instead of serving stale rows,
     while repeat runs against an unchanged corpus hit the ``_SUCCESS``
-    marker and skip straight to the read. ``build`` is a zero-arg
+    marker and skip straight to the read (under the tag's cached
+    schema, so a hit runs no Spark job). ``build`` is a zero-arg
     callable returning the DataFrame to materialize; it only runs on
     a cache miss.
 
@@ -55,7 +56,7 @@ def stored_index(spark, sf_dir, table, name, filename, build):
     import fcntl
     import shutil
 
-    from .catalog import table_path
+    from .catalog import read_parquet, table_path
 
     src = table_path(sf_dir, table)
     tag = "{}-{}".format(
@@ -79,7 +80,8 @@ def stored_index(spark, sf_dir, table, name, filename, build):
                 # safe to clear, then publish atomically
                 shutil.rmtree(path, ignore_errors=True)
                 os.rename(tmp, path)
-    return spark.read.parquet(path)
+    # a published tag never changes: its inferred schema is cached
+    return read_parquet(spark, path)
 
 
 def warehouse_dir(spark) -> str:

@@ -119,13 +119,15 @@ def _drain(
 
 def _spool(
     spark: SparkSession, name: str
-) -> tuple[Callable[[DataFrame, int], None], Callable[[], DataFrame]]:
+) -> tuple[Callable[[DataFrame, int], None], Callable[..., DataFrame]]:
     """(sink, read) over a fresh scratch spool ``name``. The
     ``foreachBatch`` sink writes each micro-batch to its own
     ``batch_id=<b>`` directory with overwrite, so a replayed batch
     replaces its own rows instead of duplicating them; ``read()``
     returns every batch written so far, without the partition
-    column."""
+    column, and ``read(before=b)`` only the batches before ``b`` (what
+    batch ``b`` may join against even when it is a replay whose own
+    rows are already spooled)."""
     root = _scratch(name)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -133,8 +135,11 @@ def _spool(
             os.path.join(root, f"batch_id={batch_id}")
         )
 
-    def read() -> DataFrame:
-        return spark.read.parquet(root).drop("batch_id")
+    def read(before: int | None = None) -> DataFrame:
+        df = spark.read.parquet(root)
+        if before is not None:
+            df = df.filter(F.col("batch_id") < before)
+        return df.drop("batch_id")
 
     return sink, read
 
@@ -711,7 +716,9 @@ def minhash_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b")
         )
         if batch_id > 0:
-            idx = index().select(
+            # the index as of the previous batch: a replay of this
+            # batch must not join against its own spooled keys
+            idx = index(before=batch_id).select(
                 F.col("doc_id").alias("doc_b"), "band_key"
             )
             cross = a.join(idx, "band_key").select(

@@ -243,3 +243,37 @@ def test_spool_and_fold_absorb_a_replayed_batch(spark, tmp_path, monkeypatch):
 
     with pytest.raises(FileNotFoundError, match="v0 is missing"):
         jobs._fold(str(tmp_path / "no_v0"), 1, counts(0, 3), merge)
+
+
+def test_minhash_stream_replay_after_index_write(spark, tmp_path, monkeypatch):
+    """foreachBatch may deliver a batch again after its sink already
+    spooled the batch's band keys into the index. The replay must join
+    only against the index of earlier batches: joined against its own
+    keys it would admit every (doc, doc) pair at Jaccard 1.0. Every
+    batch is delivered twice here, and the result must still equal the
+    batch oracle."""
+    from data_pipeline_postgres_spark.plans import registry
+    from data_pipeline_postgres_spark.streaming import jobs
+
+    from .oracle_util import assert_matches_oracle, duck_connect
+
+    registry.load_all()
+    monkeypatch.setattr(jobs, "_SCRATCH", str(tmp_path))
+    drain = jobs._drain
+
+    def at_least_once(df, ckpt, *, mode, sink=None, table=None):
+        def replaying(batch_df, batch_id):
+            sink(batch_df, batch_id)
+            sink(batch_df, batch_id)  # redelivered after the index write
+
+        return drain(df, ckpt, mode=mode, sink=replaying, table=table)
+
+    monkeypatch.setattr(jobs, "_drain", at_least_once)
+    got = jobs.minhash_dedup_stream(spark, SF_SMOKE)
+    assert got.filter(F.col("doc_a") == F.col("doc_b")).count() == 0
+    assert_matches_oracle(
+        got,
+        duck_connect(SF_SMOKE),
+        registry.ORACLES["stream_minhash_dedup"],
+        "stream_minhash_dedup+replay",
+    )
