@@ -1746,7 +1746,7 @@ _SCD2_CUTOFF = "2000-01-01"
 _SCD2_APPLY_ORACLE = f"""
 WITH pre AS (
     SELECT o_custkey, o_orderkey,
-           CAST(o_totalprice AS DECIMAL(18,2)) AS o_totalprice,
+           CAST(o_totalprice AS DOUBLE) AS o_totalprice,
            CAST(o_orderdate AS DATE) AS d
     FROM orders WHERE CAST(o_orderdate AS DATE) < DATE '{_SCD2_CUTOFF}'
 ),
@@ -1761,7 +1761,7 @@ dim0 AS (
 ),
 post AS (
     SELECT o_custkey, o_orderkey,
-           CAST(o_totalprice AS DECIMAL(18,2)) AS o_totalprice,
+           CAST(o_totalprice AS DOUBLE) AS o_totalprice,
            CAST(o_orderdate AS DATE) AS d,
            row_number() OVER (PARTITION BY o_custkey
                               ORDER BY CAST(o_orderdate AS DATE),
@@ -1836,7 +1836,7 @@ def q_cdc_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     cast is lossless and ``is_current`` still encodes open-endedness.
     """
     o = load_table(spark, sf_dir, "orders")
-    price = F.col("o_totalprice").cast("decimal(18,2)")
+    price = F.col("o_totalprice").cast("double")
     d = F.col("o_orderdate").cast("date")
     cutoff = F.lit(_SCD2_CUTOFF).cast("date")
     base = o.select(

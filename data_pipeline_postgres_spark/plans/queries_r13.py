@@ -72,7 +72,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # test corpus the score is bimodal exactly like the 8-gram variant,
 # and the >= 0.5 pair set is IDENTICAL to dedup_payload_shingle's
 # (asserted in tests/test_round13.py at sf0.001 and by
-# tools/check_queries.py at sf0.01).
+# tools/drive.py at sf0.01).
 
 _PAYLOAD_CDC_ORACLE = f"""
 WITH manifest AS MATERIALIZED (

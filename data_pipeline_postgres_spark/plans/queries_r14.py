@@ -902,7 +902,7 @@ def q_emb_ivf_delta_merge(
 _STREAM_SCD2_ORACLE = """
 WITH base AS (
     SELECT o_custkey, o_orderkey,
-           CAST(o_totalprice AS DECIMAL(18,2)) AS o_totalprice,
+           CAST(o_totalprice AS DOUBLE) AS o_totalprice,
            CAST(o_orderdate AS DATE) AS d
     FROM orders
 )

@@ -75,6 +75,20 @@ def arrow_type_family(t: pa.DataType) -> str:
     return str(t)
 
 
+def decimal_columns(spark_df) -> list[str]:
+    """Output columns of DecimalType. The registry casts 2-decimal
+    measures to double on both sides (plans/registry.py), and Spark's
+    ``toPandas()`` hands Decimal objects where DuckDB's ``.df()`` hands
+    float64, so no registered query may emit one."""
+    from pyspark.sql import types as T
+
+    return [
+        f.name
+        for f in spark_df.schema.fields
+        if isinstance(f.dataType, T.DecimalType)
+    ]
+
+
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:
@@ -137,6 +151,11 @@ def assert_matches_oracle(spark_df, con, sql: str, name: str = "?") -> None:
 
     assert sorted(s_cols) == sorted(d_cols), (
         f"[{name}] column mismatch: spark={sorted(s_cols)} duck={sorted(d_cols)}"
+    )
+    decimals = decimal_columns(spark_df)
+    assert not decimals, (
+        f"[{name}] DecimalType output column(s) {decimals}: "
+        "cast to double on both sides"
     )
     s_fams = {
         f.name: spark_type_family(f.dataType)

@@ -8,7 +8,7 @@ import pytest
 from data_pipeline_postgres_spark.plans import registry
 
 from .conftest import SF_SMOKE
-from .oracle_util import assert_matches_oracle, duck_connect
+from .oracle_util import assert_matches_oracle, decimal_columns, duck_connect
 
 registry.load_all()
 ORACLE_QUERIES = sorted(registry.ORACLES)
@@ -49,10 +49,12 @@ def test_events_load_does_not_leak_session_conf(spark):
 
 
 def test_rows_only_queries_run(spark):
-    """Queries without an oracle must still run and return a schema."""
+    """Queries without an oracle must still run and return a schema
+    with no DecimalType column."""
     for name, fn in registry.QUERIES.items():
         if name in registry.ORACLES:
             continue
         df = fn(spark, SF_SMOKE)
         assert df.columns, name
+        assert not decimal_columns(df), name
         assert df.count() >= 0, name

@@ -1,9 +1,9 @@
-"""Every batch parquet read in ``catalog.py``, ``pipelines.py`` and
-``scratch.py`` passes a schema: a bare ``spark.read.parquet(path)``
-runs a schema-inference Spark job each time a query is built. The one
-allowed bare read is the inference itself, inside
-``catalog._inferred_schema``, which caches its result per file
-version.
+"""Every batch parquet read in ``catalog.py``, ``pipelines.py``,
+``scratch.py`` and ``streaming/jobs.py`` passes a schema: a bare
+``spark.read.parquet(path)`` runs a schema-inference Spark job each
+time a query is built. The one allowed bare read is the inference
+itself, inside ``catalog._inferred_schema``, which caches its result
+per file version.
 Reads the source; no Spark."""
 
 from __future__ import annotations
@@ -36,7 +36,9 @@ def _bare_reads(tree: ast.AST) -> list[ast.Call]:
     return out
 
 
-@pytest.mark.parametrize("module", ["pipelines.py", "scratch.py"])
+@pytest.mark.parametrize(
+    "module", ["pipelines.py", "scratch.py", "streaming/jobs.py"]
+)
 def test_no_schema_less_read(module):
     bare = _bare_reads(ast.parse((PACKAGE / module).read_text()))
     assert not bare, (

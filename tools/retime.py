@@ -11,7 +11,7 @@ median of N timed noop-sink runs, spread = max-min), and rewrites just
 those rows of the target archive, recording the repair in a
 ``repairs`` key so the provenance of every folded number is explicit.
 
-Run it solo: never concurrently with bench.py or drive_contract.py
+Run it solo: never concurrently with bench.py or tools/drive.py
 (shared .scratch/ and CPU contention are exactly the noise this
 removes).
 
