@@ -6,11 +6,19 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in ``data_pipeline_postgres_spark``; this module
-is a thin shim over its registry (plans/registry.py).
+is a thin shim over its registry (plans/registry.py). Both mappings
+follow ``registry.driver_order`` over the ``CORRECTNESS_r*.json``
+records beside this file, so the sweep's window always holds the
+hash-red, then the never-checked, then the least recently checked
+queries.
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,14 +35,30 @@ def entry(spark: SparkSession) -> DataFrame:
     return flagship(spark, SMOKE_SF_DIR)
 
 
+def correctness_records() -> dict[int, dict]:
+    """The driver's per-round correctness records, keyed by round."""
+    root = os.path.dirname(os.path.abspath(__file__))
+    out = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if m:
+            with open(path) as f:
+                out[int(m.group(1))] = json.load(f)
+    return out
+
+
+def _in_driver_order(d: dict) -> dict:
+    registry.load_all()
+    order = registry.driver_order(registry.QUERIES, correctness_records())
+    return {name: d[name] for name in order if name in d}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    registry.load_all()
-    return dict(registry.QUERIES)
+    return _in_driver_order(registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query (omitted for
     non-SQL-expressible ops → driver records rows-only checks)."""
-    registry.load_all()
-    return dict(registry.ORACLES)
+    return _in_driver_order(registry.ORACLES)

@@ -6,9 +6,9 @@ last_updated DESC)`` ×10 columns + DISTINCT (reference:
 mnt/dags/unused_02retail_stage.py:109-122).
 
 The idiomatic Spark form is a ``row_number() == 1`` filter — one window
-exec, no DISTINCT re-shuffle. Both forms are provided; tests assert
-equivalence. Scale note: a single hash-partitioned shuffle on the key;
-skewed keys are handled by AQE skew-join/partition splitting.
+exec, no DISTINCT re-shuffle. Scale note: a single hash-partitioned
+shuffle on the key; skewed keys are handled by AQE skew-join/partition
+splitting.
 """
 
 from __future__ import annotations
@@ -38,20 +38,6 @@ def latest_per_key(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def latest_per_key_first_value(
-    df: DataFrame, keys: Sequence[str], order_col: str
-) -> DataFrame:
-    """Literal-parity form: ``first_value`` of every non-key column over
-    the descending window, then DISTINCT (reference:
-    mnt/dags/unused_02retail_stage.py:109-122)."""
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    others = [c for c in df.columns if c not in keys]
-    return df.select(
-        *[F.col(k) for k in keys],
-        *[F.first(c).over(w).alias(c) for c in others],
-    ).distinct()
 
 
 def global_rank(

@@ -11,11 +11,15 @@ Conventions (driver contract, __spark_entry__.py):
   bit-stable regardless of partial-agg ordering (SURVEY.md §5).
 - Non-SQL-expressible ops (spark.ml LSH, stateful streaming) have no
   oracle entry → the driver records a rows-only check.
+
+``QUERIES`` is the one query list: it keeps registration order, the
+bench times all of it, and the driver's correctness window is derived
+from it by ``driver_order`` over the driver's own records.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,120 +41,30 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver's correctness sweep checks exactly the first 50 entries of
-# ``queries()`` in dict-insertion order (verified: CORRECTNESS_r01..r14
-# keys == list(QUERIES)[:50]).
-#
-# Round-15 window (committed as VERDICT r14 items 1-3, first commit of
-# the round): (a) ``cdc_scd2_apply`` stays at position 1 — the r12/r13/
-# r14 hash-red, now re-driven with a SHAPE change (null-free sentinel
-# validity bounds, 9999-12-31, on both engine and oracle sides) after
-# the r13 LTZ→NTZ flavor diagnosis was falsified by the r14 re-drive;
-# (b) ``scd2_intervals`` as the CONTROLLED EXPERIMENT — the only other
-# null-bearing-timestamp emitter, green but last driven r8, kept
-# null-bearing on purpose: red ⇒ driver-hasher null-timestamp bug
-# confirmed fleet-wide; green ⇒ theory dead and the plan diff becomes
-# the next bisect axis; (c) the 14 round-14 net-new queries, never
-# driver-checked (all locally oracle-verified at sf0.001/0.01/0.1 —
-# note ``stream_scd2_apply`` carries the same sentinel-bounds fix as
-# (a)); (d) the 32 remaining round-7-stale rows, alphabetical; (e) the
-# alphabetically-first 2 of the round-8-stale tier.
-# 1 + 1 + 14 + 32 + 2 = 50.
-#
-# Round-16 rotation queue (enumerated, VERDICT r14 item 4): the 47
-# remaining round-8-stale rows, alphabetically — the 50-row tier minus
-# the 2 pulled into r15 and minus scd2_intervals, which moves to
-# wherever the F6 experiment outcome dictates:
-# arith_div, arith_mul, cast_numeric, cdc_merge, csv_read, csv_write,
-# customer_churn_inactive, date_fmt_partition, delete_all,
-# distinct_rows, docs_curation_funnel,
-# docs_length_percentiles_by_source, docs_source_quality, drop_col,
-# events_attribution_first_touch, events_attribution_last_touch,
-# events_dau_wau_mau, events_hourly_seasonality,
-# events_user_diversity, filter_date_range, graph_communities_lpa,
-# graph_degree_stats, graph_link_prediction,
-# graph_pagerank_copurchase, in_list_pred, jdbc_scan_full,
-# jdbc_scan_param, jdbc_scan_pushdown, join_broadcast_dim,
-# join_shuffle_fact, order_by_multi, orders_interarrival_stats,
-# orders_monthly_revenue_yoy, profile_corr_matrix, project_cols,
-# referential_integrity_sweep, sort_pandas, str_lit_tag,
-# text_lines_roundtrip, union_all, unpivot_melt, unpivot_union_all,
-# upsert_on_conflict, window_cumulative, window_latest_per_key,
-# window_ntile, window_topk_per_group
-# — then the 5 r15 net-new queries (orders_theil_sen_trend_long,
-# orders_price_index_laspeyres, lineitem_p_chart,
-# stream_ivm_agg_maintenance, tokenizer_bpe_apply) fill the window
-# to 50, spilling the tail to r17 with the round-9-stale tier next.
-#
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # (a) the r12/r13/r14 red, re-driven with null-free sentinel bounds
-    "cdc_scd2_apply",
-    # (b) the F6 controlled experiment: still null-bearing NTZ, last r8
-    "scd2_intervals",
-    # (c) round-14 net-new, never driver-checked
-    "stream_scd2_apply",
-    "dedup_bloom_incremental",
-    "emb_ivf_delta_merge",
-    "layout_file_skipping_audit",
-    "layout_partition_skew_audit",
-    "parts_er_fuzzy_name",
-    "parts_price_elasticity",
-    "customers_dp_group_counts",
-    "supplier_scorecard_weighted",
-    "pipeline_ivm_agg_maintenance",
-    "multimodal_nibble_entropy",
-    "events_attribution_shapley",
-    "parts_eoq_policy",
-    "events_gap_fill_interpolate",
-    # (d) the 32 remaining round-7-stale rows, alphabetical
-    "docs_token_budget_select",
-    "emb_knn_classify",
-    "emb_pq_encode",
-    "events_activity_streaks",
-    "events_anomaly_mad",
-    "events_changepoint_cusum",
-    "events_markov_transitions",
-    "events_retention_cohorts",
-    "events_trend_ols",
-    "graph_triangle_stats",
-    "join_asof_nearest",
-    "json_extract",
-    "json_source_roundtrip",
-    "multimodal_decode",
-    "orders_assoc_rules",
-    "orders_cohort_ltv",
-    "orders_copurchase_pairs",
-    "project_star",
-    "sim_ann_pq_adc",
-    "sim_ivfpq_index_search",
-    "stream_dedup",
-    "stream_gopher_filter",
-    "stream_hll_rollup",
-    "stream_minhash_dedup",
-    "supplier_pareto_share",
-    "table_quality_checks",
-    "tokenizer_vocab_coverage",
-    "tpch_q11_important_stock",
-    "tpch_q16_parts_supplier",
-    "tpch_q20_potential_promotion",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_profit",
-    # (e) alphabetically-first 2 of the round-8-stale tier
-    "agg_group_sum_multi",
-    "agg_rollup",
-)
+def driver_order(
+    names: Iterable[str], records: Mapping[int, Mapping[str, Mapping]]
+) -> list[str]:
+    """Order ``names`` for the driver's correctness sweep, which checks
+    only the first entries of ``queries()``.
 
+    ``records`` maps a round to that round's ``CORRECTNESS_r{N}.json``
+    ({name: {"hash_match": ...}}). A query's newest record decides its
+    place: hash-red first (``hash_match`` false; a rows-only record's
+    null is not red), then never-recorded, then the rest by ascending
+    round of the newest record. Ties keep the order of ``names``.
+    """
+    newest: dict[str, tuple[int, Mapping]] = {}
+    for rnd in sorted(records):
+        for name, rec in records[rnd].items():
+            newest[name] = (rnd, rec)
 
-def _reorder() -> None:
-    """Rewrite QUERIES/ORACLES insertion order: DRIVER_PRIORITY first,
-    then everything else in registration order."""
-    for d in (QUERIES, ORACLES):
-        snapshot = dict(d)
-        d.clear()
-        for name in DRIVER_PRIORITY:
-            if name in snapshot:
-                d[name] = snapshot.pop(name)
-        d.update(snapshot)
+    def rank(name: str) -> tuple[int, int]:
+        if name not in newest:
+            return (1, 0)
+        rnd, rec = newest[name]
+        return (0, 0) if rec.get("hash_match") is False else (2, rnd)
+
+    return sorted(names, key=rank)
 
 
 def load_all() -> None:
@@ -165,5 +79,3 @@ def load_all() -> None:
     from . import queries_r14  # noqa: F401
     from . import queries_r15  # noqa: F401
     from . import queries_tpch  # noqa: F401
-
-    _reorder()

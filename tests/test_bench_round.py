@@ -1,9 +1,12 @@
 """``bench.py`` validates ``SPARK_GRAFT_BENCH_ROUND`` before it runs
 anything: a positive integer overrides the archive round, unset falls
 back to the scan, anything else exits with a message naming the
-variable. No Spark session is started."""
+variable. The scan files a run under the round after the newest
+driver record of the same core count. No Spark session is started."""
 
 from __future__ import annotations
+
+import json
 
 import pytest
 
@@ -25,3 +28,27 @@ def test_accepts_positive_integer(monkeypatch):
 def test_unset_means_scan(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_BENCH_ROUND", raising=False)
     assert bench.round_override() is None
+
+
+def _round16_files(root):
+    """The driver records present when round 16's 8-core run ended:
+    rounds 1-15 at 32 cores, round 15 at 8 cores, and round 16's
+    32-core record written after its run."""
+    for n in range(1, 17):
+        (root / f"BENCH_r{n:02d}.json").write_text(json.dumps({"n": n, "cpus": 32}))
+    (root / "BENCH_r15_c8.json").write_text(json.dumps({"n": 15, "cpus": 8}))
+    for name in ("BENCH_DETAIL_r15.json", "BENCH_DETAIL_r15_c8.json",
+                 "BENCH_DETAIL_r16_c32.json"):
+        (root / name).write_text("{}")
+
+
+def test_round_follows_the_same_core_count(tmp_path):
+    _round16_files(tmp_path)
+    assert bench.archive_round(str(tmp_path), 8) == 16
+    assert bench.archive_round(str(tmp_path), 32) == 17
+
+
+def test_round_falls_back_to_any_core_count(tmp_path):
+    _round16_files(tmp_path)
+    assert bench.archive_round(str(tmp_path), 4) == 17
+    assert bench.archive_round(str(tmp_path / "missing"), 4) == 1

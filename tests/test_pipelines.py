@@ -14,7 +14,11 @@ from data_pipeline_postgres_spark.plans.flagship import flagship
 
 from .conftest import SF_SMOKE
 
-WORK = "/root/repo/.scratch/pipeline_test"
+WORK = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".scratch",
+    "pipeline_test",
+)
 DATES = [f"2024-01-{d:02d}" for d in range(1, 31)]
 
 

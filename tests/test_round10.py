@@ -16,41 +16,6 @@ from data_pipeline_postgres_spark.plans import registry
 registry.load_all()
 
 
-class TestDriverWindowContract:
-    """The driver's correctness sweep checks exactly the first 50
-    registry entries; a typo in DRIVER_PRIORITY would silently drop a
-    query out of the window (``_reorder`` skips unknown names)."""
-
-    def test_priority_names_all_registered_and_first(self):
-        assert len(registry.DRIVER_PRIORITY) == 50
-        assert len(set(registry.DRIVER_PRIORITY)) == 50
-        missing = [
-            n for n in registry.DRIVER_PRIORITY if n not in registry.QUERIES
-        ]
-        assert not missing, f"unknown names in DRIVER_PRIORITY: {missing}"
-        assert list(registry.QUERIES)[:50] == list(registry.DRIVER_PRIORITY)
-
-    def test_window_queries_are_oracle_backed_or_declared(self):
-        # every window entry is either oracle-backed or one of the
-        # registry's declared rows-only-by-design queries (those still
-        # need driver evidence — the check is weaker, not absent — so
-        # they rotate through the window like everything else)
-        declared_rows_only = set(registry.QUERIES) - set(registry.ORACLES)
-        undeclared = [
-            n
-            for n in registry.DRIVER_PRIORITY
-            if n not in registry.ORACLES and n not in declared_rows_only
-        ]
-        assert undeclared == []
-        # the r15 window carries exactly 1 rows-only entry: the
-        # streaming HLL rollup from the round-7-stale tier (sketch
-        # internals, accuracy-gated in pytest); everything else in the
-        # window is oracle-backed
-        assert sorted(
-            n for n in registry.DRIVER_PRIORITY if n not in registry.ORACLES
-        ) == ["stream_hll_rollup"]
-
-
 class TestSurveyRegistrySync:
     """SURVEY.md §2 is the judge's coverage checklist; keep it and the
     registry from drifting apart."""
@@ -64,7 +29,8 @@ class TestSurveyRegistrySync:
     def _section2():
         import re
 
-        src = open("/root/repo/SURVEY.md").read()
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        src = open(os.path.join(root, "SURVEY.md")).read()
         s2 = src[
             src.index("## 2. Operator inventory"):
             src.index("## 3. Query lifecycle")

@@ -185,20 +185,3 @@ def test_nanos_branch_still_works(spark, tmp_path):
     assert rows[1] == "2024-01-15T10:50:00"
     assert rows[2] == "2024-01-15T10:50:00.000001"
     assert dict(df.dtypes)["ts"] == "timestamp"
-
-
-def test_driver_priority_is_consistent():
-    """A typo in DRIVER_PRIORITY silently burns driver correctness
-    slots (unknown names are skipped by the reorder); pin the
-    invariants: every name registered, no duplicates, exactly the
-    driver's 50-query window, and the registry's first 50 keys ARE
-    the priority list."""
-    from data_pipeline_postgres_spark.plans import registry
-
-    registry.load_all()
-    pri = registry.DRIVER_PRIORITY
-    assert len(pri) == 50
-    assert len(set(pri)) == len(pri)
-    unknown = [n for n in pri if n not in registry.QUERIES]
-    assert not unknown, f"priority names not registered: {unknown}"
-    assert list(registry.QUERIES)[:50] == list(pri)

@@ -1,6 +1,6 @@
 """Bounded-window plan contract (round-10, VERDICT r9 item 3).
 
-Every partition-less WindowExec in the headline plans runs over a
+Every partition-less WindowExec in the registered plans runs over a
 relation that an aggregate or limit has already bounded (bucket
 totals, calendar dailies, B-replicate bootstrap tables, <=10-row
 rankings) — that boundedness used to be a comment-level claim per
@@ -8,7 +8,7 @@ site. This test makes it a contract: a future edit that feeds a
 data-sized relation into an unpartitioned window FAILS here instead
 of becoming a silent single-partition sort of the corpus.
 
-Rule enforced, per headline query:
+Rule enforced, per registered query:
 - queries NOT in ``ALLOWED_UNPARTITIONED`` must have zero
   partition-less WindowExec nodes;
 - queries in the allowlist may have them, but every root-to-leaf
@@ -42,6 +42,12 @@ ALLOWED_UNPARTITIONED = {
     "agg_bootstrap_ci_mean",
     # tercile thresholds over per-bucket totals (<= n_buckets rows)
     "docs_ccnet_buckets",
+    # bucket_refine_quantiles(keys=[]) locate/refine cum-sums over the
+    # bucket histogram and the few target buckets' value histogram
+    # (<= max(n_buckets, width) rows), same shape as docs_ccnet_buckets;
+    # customer_rfm_segments runs it for each of its three metrics
+    "bucket_global_quantile",
+    "customer_rfm_segments",
     # same bucket_refine tercile shape over per-bucket score totals
     # (<= n_buckets rows; the LM-score relation never enters a window)
     "docs_perplexity_bucket",
@@ -144,23 +150,13 @@ def _bounded(node, seen_agg: bool) -> bool:
     return all(_bounded(c, seen_agg) for c in ch)
 
 
-def _headline_names():
-    import bench
-
-    return [
-        n
-        for n in bench.HEADLINE + bench.EXT_HEADLINE
-        if n in registry.QUERIES
-    ]
-
-
 def test_partitionless_windows_are_allowlisted_and_bounded(spark):
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         violations = []
-        for name in _headline_names():
-            df = registry.QUERIES[name](spark, SF)
+        for name, fn in registry.QUERIES.items():
+            df = fn(spark, SF)
             plan = df._jdf.queryExecution().executedPlan()
             bare = [
                 node

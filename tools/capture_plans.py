@@ -4,11 +4,11 @@ the before/after plan evidence for optimization rounds.
 Usage: python tools/capture_plans.py --root REPO_ROOT --out DIR \
        --suffix before [--sf DIR] name [name ...]
 
-REPO_ROOT is prepended to sys.path, so pointing it at a pristine
-checkout of an older commit captures that commit's plans. Streaming
-queries execute their drain on construction; their captured plan is
-the post-drain batch result's (the only plan the driver's oracle
-sees).
+REPO_ROOT (default: this tool's own checkout) is prepended to
+sys.path, so pointing it at a pristine checkout of an older commit
+captures that commit's plans. Streaming queries execute their drain
+on construction; their captured plan is the post-drain batch result's
+(the only plan the driver's oracle sees).
 """
 
 import argparse
@@ -17,7 +17,9 @@ import os
 import sys
 
 p = argparse.ArgumentParser()
-p.add_argument("--root", default="/root/repo")
+p.add_argument(
+    "--root", default=os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 p.add_argument("--out", required=True)
 p.add_argument("--suffix", required=True)
 p.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))

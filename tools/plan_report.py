@@ -1,232 +1,17 @@
-"""Regenerate PLANS.md: the formatted physical plan of each headline
+"""Regenerate PLANS.md: the formatted physical plan of every registered
 query at the bench scale dir — the artifact to audit shuffle/broadcast/
 pushdown decisions without rerunning anything.
 
-Usage: python tools/plan_report.py  (writes /root/repo/PLANS.md)
+Usage: python tools/plan_report.py  (writes PLANS.md at the repo root)
 """
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from data_pipeline_postgres_spark.plans import registry
 from data_pipeline_postgres_spark.session import get_spark
-
-SHOWCASE = [
-    "material_demand",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier",
-    "tpch_q6_forecast_revenue",
-    "tpch_q18_large_orders",
-    "join_bucketed_colocated",
-    "join_asof",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_incremental",
-    "dedup_minhash_incremental",
-    "agg_percentile",
-    "sim_topk",
-    "sim_ann_ivf",
-    "sim_topk_batch",
-    "docs_pack_sequences",
-    "docs_curation_pipeline",
-    "profile_table",
-    "bucket_global_quantile",
-    "dedup_paragraph",
-    "text_inverted_index",
-    "dedup_semantic",
-    "decontaminate_ngram",
-    "agg_winsorize",
-    "layout_zorder",
-    "emb_random_projection",
-    "orders_copurchase_pairs",
-    "dedup_containment",
-    "tokenizer_vocab_coverage",
-    "docs_ccnet_buckets",
-    "table_quality_checks",
-    "binary_file_ingest",
-    "agg_hll_sketch_rollup",
-    "emb_pq_encode",
-    "sim_ann_pq_adc",
-    "sim_ivfpq_index_search",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "docs_gopher_quality",
-    "dedup_substring_windows",
-    "events_anomaly_mad",
-    "events_trend_ols",
-    "events_changepoint_cusum",
-    "graph_pagerank_copurchase",
-    "graph_communities_lpa",
-    "graph_triangle_stats",
-    "emb_knn_classify",
-    "join_asof_nearest",
-    "orders_assoc_rules",
-    "events_activity_streaks",
-    "events_markov_transitions",
-    "docs_chunk_overlap",
-    "orders_cohort_ltv",
-    "customer_churn_inactive",
-    "events_user_diversity",
-    "orders_interarrival_stats",
-    "events_attribution_first_touch",
-    "docs_curation_funnel",
-    "profile_corr_matrix",
-    "graph_link_prediction",
-    "referential_integrity_sweep",
-    "events_dau_wau_mau",
-    "docs_source_quality",
-    "events_user_gini",
-    "orders_ship_backlog_daily",
-    "events_rolling_slope_7d",
-    "emb_label_drift",
-    "emb_outlier_topk",
-    "docs_boilerplate_ngrams",
-    "docs_near_dup_rate_by_source",
-    "docs_vocab_growth",
-    "docs_quality_dup_crosstab",
-    "dedup_simhash_hamming_hist",
-    "events_anomaly_zscore_rolling",
-    "docs_mix_temperature_alloc",
-    "jdbc_scan_partitioned",
-    "docs_dedup_impact_tokens",
-    "emb_centroid_cosine_matrix",
-    "dedup_minhash_jaccard_hist",
-    "events_audience_overlap",
-    "events_new_vs_returning",
-    # round-9 additions
-    "decontaminate_embedding",
-    "graph_kcore",
-    "graph_bfs_distance",
-    "table_diff_audit",
-    "bpe_pair_merges",
-    "text_bigram_logprob",
-    "lang_id_confusion",
-    "dedup_simhash_incremental",
-    "events_pattern_detect",
-    "profile_column_entropy",
-    "docs_pack_fragmentation",
-    "docs_shingle_novelty",
-    "csv_malformed_permissive",
-    # late-round-9 additions
-    "part_entity_match",
-    "sim_topk_int8",
-    "sim_topk_int8_recall",
-    "events_session_paths",
-    "agg_weighted_median",
-    "orders_revenue_holt_forecast",
-    "sketch_count_min_freq",
-    "sketch_bloom_membership",
-    "multimodal_shard_manifest",
-    "events_out_of_order_audit",
-    "text_bigram_kn_logprob",
-    "part_brand_discount_ols",
-    "events_ab_welch_ttest",
-    "events_km_conversion_curve",
-    "events_cuped_ab_adjusted",
-    "graph_random_walks",
-    "agg_bootstrap_ci_mean",
-    "text_bm25_search",
-    "search_hybrid_rrf",
-    "graph_walk_skipgram_pairs",
-    "events_psi_value_drift",
-    "events_ks_two_sample",
-    "events_mann_whitney_u",
-    "events_chi2_independence",
-    "events_did_estimator",
-    "orders_holt_backtest",
-    "text_rake_keywords",
-    "docs_naive_bayes_source",
-    "orders_theil_sen_trend",
-    "text_pmi_collocations",
-    "docs_winnowing_fingerprints",
-    "events_burst_range_join",
-    "docs_nb_margin_calibration",
-    "docs_ngram_novelty_curve",
-    # round-11 additions
-    "docs_bpe_train_merges",
-    "docs_url_dedup_cap",
-    "docs_snapshot_curation_diff",
-    "docs_perplexity_bucket",
-    "decontaminate_overlap_frac",
-    "tokenizer_fertility_by_lang",
-    "emb_cosine_calibration",
-    "dedup_minhash_band_sweep",
-    "decontaminate_multi_benchmark",
-    "docs_dup_source_matrix",
-    "events_holt_winters_forecast",
-    "demand_croston_forecast",
-    "docs_dsir_gumbel_select",
-    "cdc_scd2_apply",
-    "sim_ivf_nprobe_recall_curve",
-    "text_textrank_keywords",
-    "join_asof_tolerance",
-    # round-12 additions
-    "docs_pack_bestfit",
-    "docs_pack_efficiency",
-    "dedup_payload_shingle",
-    "docs_mix_capped_alloc",
-    "dedup_payload_incremental",
-    "docs_dup_spectrum",
-    "docs_dup_maxrun",
-    "events_attribution_models",
-    "events_attribution_markov",
-    "multimodal_cdc_chunks",
-    "multimodal_cdc_dedup_ratio",
-    "customers_k_anonymity",
-    "profile_dq_constraints",
-    "docs_score_auc",
-    "customers_kaplan_meier",
-    "layout_compaction_plan",
-    "orders_seasonal_decompose",
-    "docs_mix_temperature",
-    "tokenizer_coverage_curve",
-    "sim_mmr_rerank",
-    "emb_knn_label_accuracy",
-    "emb_mutual_knn",
-    "graph_assortativity",
-    "graph_modularity",
-    "orders_benford_audit",
-    "orders_runs_test",
-    "pipeline_backfill_plan",
-    "dedup_method_overlap",
-    "customer_feature_snapshot",
-    # round-13 additions
-    "dedup_payload_cdc",
-    "emb_mutual_knn_ann",
-    "emb_kmeans_lloyd",
-    "orders_acf",
-    "orders_mann_kendall",
-    "orders_rfm_segments",
-    "parts_abc_classification",
-    "customer_churn_training_set",
-    "docs_curriculum_pacing",
-    "docs_split_leakage_audit",
-    "layout_vacuum_plan",
-    "profile_drift_two_period",
-    "pipeline_gdpr_erasure_plan",
-    # round-14 additions
-    "dedup_bloom_incremental",
-    "emb_ivf_delta_merge",
-    "layout_file_skipping_audit",
-    "layout_partition_skew_audit",
-    "parts_er_fuzzy_name",
-    "parts_price_elasticity",
-    "customers_dp_group_counts",
-    "supplier_scorecard_weighted",
-    "pipeline_ivm_agg_maintenance",
-    "multimodal_nibble_entropy",
-    "events_attribution_shapley",
-    "parts_eoq_policy",
-    "events_gap_fill_interpolate",
-    # round-15 additions
-    "orders_theil_sen_trend_long",
-    "orders_price_index_laspeyres",
-    "lineitem_p_chart",
-    "stream_ivm_agg_maintenance",
-    "tokenizer_bpe_apply",
-]
 
 
 def accuracy_rows(spark, sf_dir):
@@ -586,7 +371,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry.load_all()
     out = [
-        "# PLANS — formatted physical plans of the headline queries",
+        "# PLANS — formatted physical plans of the registered queries",
         "",
         f"Generated by `tools/plan_report.py` at `{sf_dir}`. Things to",
         "check per plan: `PushedFilters` reach the scans, `ReadSchema`",
@@ -620,17 +405,15 @@ def main() -> None:
         "  r10; see its table row) — use `sim_ann_ivf` for top-k.",
         "",
     ]
-    for name in SHOWCASE:
-        if name not in registry.QUERIES:
-            continue
-        df = registry.QUERIES[name](spark, sf_dir)
+    for name, fn in registry.QUERIES.items():
+        df = fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+    print(f"wrote PLANS.md ({len(registry.QUERIES)} plans)")
 
 
 if __name__ == "__main__":

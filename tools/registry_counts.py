@@ -9,9 +9,10 @@ README bump fails CI instead of shipping a stale banner.
 
 Usage: python tools/registry_counts.py
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def counts() -> tuple[int, int]:

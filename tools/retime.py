@@ -6,9 +6,10 @@ when either side's recorded spread exceeds the measured time itself —
 the record cannot distinguish plan change from host noise (r10 saw a
 32 s spread on a 3 s query, from co-running work). This tool re-times
 the named queries ALONE — no other queries sharing the JVM, no
-concurrent drive — with bench.py's exact protocol (one warm pass, then
-median of N timed noop-sink runs, spread = max-min), and rewrites just
-those rows of the target archive, recording the repair in a
+concurrent drive — with bench.py's own loop (`bench.time_queries`: one
+warm pass, then median of 3 timed noop-sink runs, spread = max-min),
+so a folded row is measured under its archive's protocol, and rewrites
+just those rows of the target archive, recording the repair in a
 ``repairs`` key so the provenance of every folded number is explicit.
 
 Run it solo: never concurrently with bench.py or tools/drive.py
@@ -16,83 +17,52 @@ Run it solo: never concurrently with bench.py or tools/drive.py
 removes).
 
 Usage: python tools/retime.py --into BENCH_DETAIL_r11.json name [...]
-       [--runs 5]  [--sf DIR]
+       [--sf DIR]
 """
 
+import argparse
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-args = sys.argv[1:]
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = 5
-into = None
-names = []
-i = 0
-while i < len(args):
-    if args[i] == "--into":
-        into = args[i + 1]
-        i += 2
-    elif args[i] == "--runs":
-        RUNS = int(args[i + 1])
-        i += 2
-    elif args[i] == "--sf":
-        SF = args[i + 1]
-        i += 2
-    else:
-        names.append(args[i])
-        i += 1
-if not into or not names:
-    sys.exit(__doc__)
-
-from data_pipeline_postgres_spark.catalog import load_table  # noqa: E402
+import bench  # noqa: E402
 from data_pipeline_postgres_spark.plans import registry  # noqa: E402
 from data_pipeline_postgres_spark.session import get_spark  # noqa: E402
 
-spark = get_spark(app_name="retime")
+p = argparse.ArgumentParser()
+p.add_argument("--into", required=True)
+p.add_argument(
+    "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+)
+p.add_argument("names", nargs="+")
+a = p.parse_args()
+
 registry.load_all()
-unknown = [n for n in names if n not in registry.QUERIES]
+unknown = [n for n in a.names if n not in registry.QUERIES]
 if unknown:
     sys.exit(f"unknown queries: {unknown}")
 
-# same session-wide warmup as bench.py
-load_table(spark, SF, "events").limit(1000).write.format("noop").mode(
-    "overwrite"
-).save()
+spark = get_spark(app_name="retime")
+timings, spreads = bench.time_queries(spark, a.sf, a.names)
+for name in a.names:
+    print(f"{name}: median {timings[name]}s spread {spreads[name]}s")
 
-timings, spreads = {}, {}
-for name in names:
-    df = registry.QUERIES[name](spark, SF)
-    df.write.format("noop").mode("overwrite").save()  # warm
-    runs = []
-    for _ in range(RUNS):
-        t0 = time.perf_counter()
-        df2 = registry.QUERIES[name](spark, SF)
-        df2.write.format("noop").mode("overwrite").save()
-        runs.append(time.perf_counter() - t0)
-    timings[name] = round(sorted(runs)[len(runs) // 2], 3)
-    spreads[name] = round(max(runs) - min(runs), 3)
-    print(f"{name}: median {timings[name]}s spread {spreads[name]}s "
-          f"(runs: {[round(r, 2) for r in runs]})")
-
-root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-path = os.path.join(root, into)
+path = os.path.join(ROOT, a.into)
 with open(path) as f:
     detail = json.load(f)
-for name in names:
-    detail["queries"][name] = timings[name]
-    detail.setdefault("spread", {})[name] = spreads[name]
+detail["queries"].update(timings)
+detail.setdefault("spread", {}).update(spreads)
 detail["value"] = round(sum(detail["queries"].values()), 3)
 repairs = detail.setdefault("repairs", {})
-for name in names:
+for name in a.names:
     repairs[name] = {
-        "how": f"solo median-of-{RUNS} retime (tools/retime.py)",
+        "how": "solo median-of-3 retime (tools/retime.py)",
         "why": "recorded spread exceeded measured time; "
                "bench_compare excluded the row as UNRELIABLE",
     }
 with open(path, "w") as f:
     json.dump(detail, f, indent=1)
-print(f"folded {len(names)} rows into {into}; new total {detail['value']}s")
+print(f"folded {len(a.names)} rows into {a.into}; new total {detail['value']}s")

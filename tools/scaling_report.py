@@ -6,17 +6,21 @@ unpartitioned window, driver funnel) and gets flagged; ratios well
 below 10× mean the sf0.1 run is still overhead-bound (session/stage
 fixed costs), i.e. there is headroom before data cost dominates.
 
-Usage: python tools/scaling_report.py   (writes /root/repo/SCALING.md)
+Every registered query is timed with bench.py's own loop
+(`bench.time_queries`: warm pass, then median of 3).
+
+Usage: python tools/scaling_report.py   (writes SCALING.md at the repo root)
 """
 
 import os
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from data_pipeline_postgres_spark.plans import registry
-from data_pipeline_postgres_spark.session import get_spark
+import bench  # noqa: E402
+from data_pipeline_postgres_spark.plans import registry  # noqa: E402
+from data_pipeline_postgres_spark.session import get_spark  # noqa: E402
 
 SMALL = "/root/testdata/sf0.01"
 BIG = "/root/testdata/sf0.1"
@@ -26,29 +30,15 @@ DATA_RATIO = 10.0
 FLAG_AT = 2.0 * DATA_RATIO
 
 
-def best_of(spark, fn, sf_dir, n=2):
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    runs = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(time.perf_counter() - t0)
-    return min(runs)
-
-
 def main() -> None:
-    import bench  # reuse the headline list
-
     spark = get_spark(app_name="scaling")
     registry.load_all()
-    names = [
-        n for n in bench.HEADLINE + bench.EXT_HEADLINE if n in registry.QUERIES
-    ]
     rows = []
-    for name in names:
-        fn = registry.QUERIES[name]
-        t_small = best_of(spark, fn, SMALL)
-        t_big = best_of(spark, fn, BIG)
+    for name in registry.QUERIES:
+        # both scales back to back, so JVM warm-up over the session
+        # charges neither side more than the other
+        t_small = bench.time_queries(spark, SMALL, [name])[0][name]
+        t_big = bench.time_queries(spark, BIG, [name])[0][name]
         ratio = t_big / t_small if t_small > 0 else float("inf")
         rows.append((name, t_small, t_big, ratio))
         print(f"{name}: {t_small:.2f}s -> {t_big:.2f}s ({ratio:.1f}x)")
@@ -57,9 +47,10 @@ def main() -> None:
     lines = [
         "# SCALING — wall-clock growth under 10× data",
         "",
-        "Generated by `tools/scaling_report.py`: each headline query",
-        f"timed (best-of-2 after warmup) at sf0.01 and sf0.1 ({int(DATA_RATIO)}× the",
-        "rows). Reading the ratio: ≈10× → data-cost-dominated and",
+        "Generated by `tools/scaling_report.py`: every registered query",
+        "timed with bench.py's protocol (warm pass, then median of 3) at",
+        f"sf0.01 and sf0.1 ({int(DATA_RATIO)}× the rows). Reading the",
+        "ratio: ≈10× → data-cost-dominated and",
         "linear; well under 10× → still overhead-bound at this scale",
         f"(headroom); over {FLAG_AT:.0f}× → super-linear suspect, investigate",
         "the plan. Stored-index queries (minhash-incremental, IVF-PQ,",
@@ -79,7 +70,7 @@ def main() -> None:
     for name, ts, tb, ratio in sorted(rows, key=lambda r: -r[3]):
         mark = " ⚠" if ratio > FLAG_AT else ""
         lines.append(f"| `{name}` | {ts:.2f} | {tb:.2f} | {ratio:.1f}×{mark} |")
-    with open(os.path.join(os.path.dirname(__file__), "..", "SCALING.md"), "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote SCALING.md ({len(rows)} queries, {len(flagged)} flagged)")
 

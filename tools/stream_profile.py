@@ -3,14 +3,16 @@ attach a StreamingQueryListener to capture each micro-batch's
 durationMs breakdown (addBatch, walCommit, queryPlanning, ...), time
 each stream job end-to-end, and report where the ~2 s goes.
 
-Run SOLO (never with bench/drive).
+Usage: python tools/stream_profile.py [name ...]
+(default: every registered ``stream_*`` query). Run SOLO (never with
+bench/drive).
 """
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -49,14 +51,7 @@ class L(StreamingQueryListener):
 
 spark.streams.addListener(L())
 
-NAMES = sys.argv[1:] or [
-    "stream_zscore_daily",
-    "stream_cms_rollup",
-    "stream_cdc_latest",
-    "stream_scd2_apply",
-    "stream_feature_snapshot",
-    "stream_payload_dedup",
-]
+NAMES = sys.argv[1:] or [n for n in registry.QUERIES if n.startswith("stream_")]
 
 for name in NAMES:
     fn = registry.QUERIES[name]
