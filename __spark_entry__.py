@@ -9,8 +9,8 @@ Implementation lives in ``data_pipeline_postgres_spark``; this module
 is a thin shim over its registry (plans/registry.py). Both mappings
 follow ``registry.driver_order`` over the ``CORRECTNESS_r*.json``
 records beside this file, so the sweep's window always holds the
-hash-red, then the never-checked, then the least recently checked
-queries.
+red (hash mismatch, or the run raised), then the never-checked, then
+the least recently checked queries.
 """
 
 from __future__ import annotations

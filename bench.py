@@ -97,8 +97,26 @@ def time_queries(
     return timings, spreads
 
 
+def archive_path(root: str, env_round: int | None) -> str:
+    """Where a full run keeps its per-round copy (BENCH_DETAIL.json is
+    gitignored and overwritten every run). Worked out before any query
+    runs, so an unreadable driver record fails in seconds, not after
+    the timing pass."""
+    if os.environ.get("SPARK_GRAFT_BENCH_NO_ARCHIVE"):
+        # local iteration run — don't claim the round's archive slot
+        return os.path.join(root, "BENCH_DETAIL.local.json")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    this_round = env_round or archive_round(root, cpus)
+    archive = os.path.join(root, f"BENCH_DETAIL_r{this_round:02d}_c{cpus}.json")
+    if os.path.exists(archive):
+        # never overwrite a cross-round record; park alongside instead
+        archive = archive.replace(".json", ".local.json")
+    return archive
+
+
 def main(argv: list[str]) -> None:
     env_round = round_override()
+    archive = None if argv else archive_path(ROOT, env_round)
     registry.load_all()
     unknown = [n for n in argv if n not in registry.QUERIES]
     if unknown:
@@ -128,20 +146,7 @@ def main(argv: list[str]) -> None:
     }
     with open(os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1)
-    if not argv:
-        # A full run keeps a per-round copy (BENCH_DETAIL.json is
-        # gitignored and overwritten every run).
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
-        this_round = env_round or archive_round(ROOT, cpus)
-        archive = os.path.join(
-            ROOT, f"BENCH_DETAIL_r{this_round:02d}_c{cpus}.json"
-        )
-        if os.environ.get("SPARK_GRAFT_BENCH_NO_ARCHIVE"):
-            # local iteration run — don't claim the round's archive slot
-            archive = os.path.join(ROOT, "BENCH_DETAIL.local.json")
-        elif os.path.exists(archive):
-            # never overwrite a cross-round record; park alongside instead
-            archive = archive.replace(".json", ".local.json")
+    if archive:
         with open(archive, "w") as f:
             json.dump(detail, f, indent=1)
     worst = dict(

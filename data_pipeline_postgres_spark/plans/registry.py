@@ -48,21 +48,29 @@ def driver_order(
     only the first entries of ``queries()``.
 
     ``records`` maps a round to that round's ``CORRECTNESS_r{N}.json``
-    ({name: {"hash_match": ...}}). A query's newest record decides its
-    place: hash-red first (``hash_match`` false; a rows-only record's
-    null is not red), then never-recorded, then the rest by ascending
-    round of the newest record. Ties keep the order of ``names``.
+    ({name: {"hash_match": ..., "err": ...}}). A query's newest record
+    decides its place: red first, then never-recorded, then the rest by
+    ascending round of the newest record. Ties keep the order of
+    ``names``. A record is red when ``hash_match`` is false or when the
+    run raised (``err`` holds a traceback, ``hash_match`` is null); a
+    rows-only record (``err`` "no_oracle", null hash) is not red.
     """
     newest: dict[str, tuple[int, Mapping]] = {}
     for rnd in sorted(records):
         for name, rec in records[rnd].items():
             newest[name] = (rnd, rec)
 
+    def red(rec: Mapping) -> bool:
+        return rec.get("hash_match") is False or rec.get("err") not in (
+            None,
+            "no_oracle",
+        )
+
     def rank(name: str) -> tuple[int, int]:
         if name not in newest:
             return (1, 0)
         rnd, rec = newest[name]
-        return (0, 0) if rec.get("hash_match") is False else (2, rnd)
+        return (0, 0) if red(rec) else (2, rnd)
 
     return sorted(names, key=rank)
 

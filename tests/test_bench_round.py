@@ -2,7 +2,9 @@
 anything: a positive integer overrides the archive round, unset falls
 back to the scan, anything else exits with a message naming the
 variable. The scan files a run under the round after the newest
-driver record of the same core count. No Spark session is started."""
+driver record of the same core count, and a full run resolves its
+archive before it starts Spark, so an unreadable record fails at
+once. No Spark session is started."""
 
 from __future__ import annotations
 
@@ -52,3 +54,36 @@ def test_round_falls_back_to_any_core_count(tmp_path):
     _round16_files(tmp_path)
     assert bench.archive_round(str(tmp_path), 4) == 17
     assert bench.archive_round(str(tmp_path / "missing"), 4) == 1
+
+
+def test_bad_record_fails_before_any_query_runs(tmp_path, monkeypatch):
+    _round16_files(tmp_path)
+    (tmp_path / "BENCH_r17.json").write_text('{"cpus": 3')  # truncated
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_ROUND", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_NO_ARCHIVE", raising=False)
+    monkeypatch.setattr(bench, "ROOT", str(tmp_path))
+
+    def no_spark(**_):
+        raise AssertionError("the bench started Spark before reading records")
+
+    monkeypatch.setattr(bench, "get_spark", no_spark)
+    with pytest.raises(json.JSONDecodeError):
+        bench.main([])
+
+
+def test_archive_path_honours_no_archive_and_never_overwrites(
+    tmp_path, monkeypatch
+):
+    _round16_files(tmp_path)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_NO_ARCHIVE", "1")
+    assert bench.archive_path(str(tmp_path), None).endswith(
+        "BENCH_DETAIL.local.json"
+    )
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_NO_ARCHIVE")
+    assert bench.archive_path(str(tmp_path), None).endswith(
+        "BENCH_DETAIL_r17_c32.json"
+    )
+    assert bench.archive_path(str(tmp_path), 16).endswith(
+        "BENCH_DETAIL_r16_c32.local.json"
+    )

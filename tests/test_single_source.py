@@ -1,7 +1,7 @@
 """The ``@query`` registry is the only query list (Spark-free).
 
-- The driver window is derived: ``registry.driver_order`` puts hash-red
-  queries first, never-checked next, then the least recently checked,
+- The driver window is derived: ``registry.driver_order`` puts red
+  queries (hash mismatch, or the run raised) first, never-checked next, then the least recently checked,
   and ``__spark_entry__`` hands the registry out in that order.
 - No harness or tool keeps a hand list of query names: a list, tuple,
   set or dict literal naming 5 or more registered queries in
@@ -25,19 +25,22 @@ ROOT = Path(__file__).resolve().parents[1]
 
 GREEN = {"hash_match": True}
 RED = {"hash_match": False}
-ROWS_ONLY = {"hash_match": None}
+ROWS_ONLY = {"hash_match": None, "err": "no_oracle"}
+ERRORED = {"hash_match": None, "err": "Traceback (most recent call last): ..."}
 
 
 def test_driver_order_rule():
-    names = ["g3", "never2", "rows_only", "red", "g1", "red_then_green", "never1"]
+    names = ["g3", "never2", "rows_only", "red", "g1", "red_then_green",
+             "never1", "errored"]
     records = {
         1: {"rows_only": ROWS_ONLY, "g1": GREEN, "red_then_green": RED,
             "unregistered": RED},
         2: {"red": RED, "red_then_green": GREEN},
-        3: {"g3": GREEN},
+        3: {"g3": GREEN, "errored": ERRORED},
     }
     assert registry.driver_order(names, records) == [
         "red",  # newest record hash-red
+        "errored",  # newest run raised: null hash, traceback in err
         "never2",  # never recorded, registration order
         "never1",
         "rows_only",  # round 1; a null hash is not red
