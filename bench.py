@@ -3,7 +3,8 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec} (the worst 10), "n_queries": ..., "sf": ...}.
-Per-query medians and spreads go to BENCH_DETAIL.json.
+Per-query medians, spreads and codegen compile counts go to
+BENCH_DETAIL.json.
 
     python bench.py              # every registered query; archives the
                                  # run as BENCH_DETAIL_r{N}_c{cpus}.json
@@ -29,7 +30,10 @@ sys.path.insert(0, ROOT)
 
 from data_pipeline_postgres_spark.catalog import load_table  # noqa: E402
 from data_pipeline_postgres_spark.plans import registry  # noqa: E402
-from data_pipeline_postgres_spark.session import get_spark  # noqa: E402
+from data_pipeline_postgres_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 
 
 def round_override() -> int | None:
@@ -71,12 +75,14 @@ def archive_round(root: str, cpus: int) -> int:
 
 def time_queries(
     spark, sf_dir: str, names: Iterable[str]
-) -> tuple[dict[str, float], dict[str, float]]:
+) -> tuple[dict[str, float], dict[str, float], dict[str, int]]:
     """Time each named query: one warm noop pass, then the MEDIAN of 3
     timed build + noop runs (best-of-N hides genuine slowdowns behind
-    one lucky run). Returns ({name: median_s}, {name: max-min spread});
-    a regression smaller than its spread is host noise, not a plan
-    change."""
+    one lucky run). Returns ({name: median_s}, {name: max-min spread},
+    {name: codegen classes compiled during the 3 timed runs}); a
+    regression smaller than its spread is host noise, not a plan
+    change, and a nonzero compile count is a query that recompiles on
+    repeat (its own new code, or an evicted codegen cache)."""
     # Session-wide warmup (JVM, codegen, Arrow, parquet footer caches)
     # so the first timed query isn't charged for engine init.
     load_table(spark, sf_dir, "events").limit(1000).write.format(
@@ -84,17 +90,20 @@ def time_queries(
     ).mode("overwrite").save()
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         fn = registry.QUERIES[name]
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs = []
+        before = codegen_compiles(spark)
         for _ in range(3):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
+        compiles[name] = codegen_compiles(spark) - before
         timings[name] = round(sorted(runs)[1], 3)
         spreads[name] = round(max(runs) - min(runs), 3)
-    return timings, spreads
+    return timings, spreads, compiles
 
 
 def archive_path(root: str, env_round: int | None) -> str:
@@ -127,7 +136,7 @@ def main(argv: list[str]) -> None:
     sf = float(sf) if sf.replace(".", "").isdigit() else sf
 
     spark = get_spark(app_name="bench")
-    timings, spreads = time_queries(spark, sf_dir, names)
+    timings, spreads, compiles = time_queries(spark, sf_dir, names)
 
     total = round(sum(timings.values()), 3)
     # Per-query timings/spreads go to a sidecar file: with 100+
@@ -142,6 +151,7 @@ def main(argv: list[str]) -> None:
         "unit": "sec",
         "queries": timings,
         "spread": spreads,
+        "codegen_compiles": compiles,
         "sf": sf,
     }
     with open(os.path.join(ROOT, "BENCH_DETAIL.json"), "w") as f:

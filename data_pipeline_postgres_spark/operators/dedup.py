@@ -795,11 +795,14 @@ def quantize_col(v: Column) -> Column:
     """JVM-side mirror of :func:`quantize_np`: L2-normalize with an
     ordered left fold (≡ numpy cumsum's strict sequential order) then
     quantize to floor(x·2^20 + 0.5) int64 — bit-identical to the
-    numpy kernel and to the DuckDB oracle."""
+    numpy kernel and to the DuckDB oracle. The norm is paired with each
+    element through ``array_repeat`` so it is folded once per row: a
+    lambda that closes over it re-runs the fold per element."""
     nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-    return F.transform(
+    return F.zip_with(
         v,
-        lambda x: F.floor(x / nrm * F.lit(QSCALE) + F.lit(0.5)).cast(
+        F.array_repeat(nrm, F.size(v)),
+        lambda x, n: F.floor(x / n * F.lit(QSCALE) + F.lit(0.5)).cast(
             "bigint"
         ),
     )

@@ -43,6 +43,10 @@ def get_spark(
       kernels that reference package functions import from any
       working directory; ``extra_conf`` may set
       ``spark.executorEnv.PYTHONPATH`` itself.
+    - Codegen class cache of 1000 entries (Spark's default is 100): one
+      perfbench ``relational_sf01`` pass compiles 123 distinct classes
+      and one ``daily_etl`` pass 158, so at 100 almost every class was
+      evicted and recompiled with Janino on every pass.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     pkg_parent = os.path.dirname(
@@ -68,9 +72,20 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.executorEnv.PYTHONPATH", worker_path)
+        # Working sets are 123 and 158 classes per pass (281 for both
+        # workloads in one session); 100 recompiles almost all of them.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled with Janino in this
+    JVM so far (``CodegenMetrics``); a codegen cache hit adds nothing.
+    In local mode executors share the driver JVM, so this counts all."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -46,7 +46,7 @@ if unknown:
     sys.exit(f"unknown queries: {unknown}")
 
 spark = get_spark(app_name="retime")
-timings, spreads = bench.time_queries(spark, a.sf, a.names)
+timings, spreads, compiles = bench.time_queries(spark, a.sf, a.names)
 for name in a.names:
     print(f"{name}: median {timings[name]}s spread {spreads[name]}s")
 
@@ -55,6 +55,7 @@ with open(path) as f:
     detail = json.load(f)
 detail["queries"].update(timings)
 detail.setdefault("spread", {}).update(spreads)
+detail.setdefault("codegen_compiles", {}).update(compiles)
 detail["value"] = round(sum(detail["queries"].values()), 3)
 repairs = detail.setdefault("repairs", {})
 for name in a.names:
