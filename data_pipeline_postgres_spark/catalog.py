@@ -192,15 +192,3 @@ def spread_scan(df: DataFrame, key: str) -> DataFrame:
         return df.repartition(target, F.col(key))
     return df
 
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Register lake tables as temp views (same names the DuckDB oracle
-    uses) and return them keyed by name."""
-    out = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -196,8 +196,7 @@ def bucket_refine_quantiles(
     shared relation on purpose — for near-continuous domains
     (extendedprice is 97% distinct at sf0.1) the histogram is as big
     as the fact and its high-cardinality exchange costs more than
-    the second pass it saves; ``bucket_refine_quantiles_from_hist``
-    exists for callers whose domain genuinely is small.
+    the second pass it saves.
     """
     keys = list(keys)
     vals = df.select(*keys, col).filter(F.col(col).isNotNull())
@@ -217,40 +216,10 @@ def bucket_refine_quantiles(
     return _pick_and_interpolate(h2, keys, col, probs, value_divisor, "_c")
 
 
-def bucket_refine_quantiles_from_hist(
-    hist: DataFrame,
-    keys: Sequence[str],
-    col: str,
-    probs: dict[str, float],
-    bucket_width: int = 4096,
-    value_divisor: float = 1.0,
-    count_col: str = "_cnt",
-) -> DataFrame:
-    """``bucket_refine_quantiles`` over a PREBUILT ``value_histogram``
-    (keys…, col, count) — for callers whose value DOMAIN is genuinely
-    small (so the histogram is far smaller than the fact) and who
-    derive other statistics (winsorized means, totals) from the same
-    single fact exchange. ``hist`` is consumed by two branches; pass
-    it materialized (localCheckpoint/persist) so the upstream
-    exchange runs once. Same non-null-key precondition as
-    bucket_refine_quantiles.
-    """
-    keys = list(keys)
-    b = hist.withColumn(
-        "_b", F.floor(F.col(col) / F.lit(bucket_width)).cast("bigint")
-    )
-    bh = b.groupBy(*keys, "_b").agg(F.sum(count_col).alias("_cnt"))
-    bt = _locate_target_buckets(bh, keys, probs)
-    # refinement: histogram rows in target buckets only (≤ width
-    # distinct values per bucket); rows are already (value, count)
-    m = b.join(F.broadcast(bt), [*keys, "_b"])
-    return _pick_and_interpolate(m, keys, col, probs, value_divisor, count_col)
-
-
 def _locate_target_buckets(
     bh: DataFrame, keys: list[str], probs: dict[str, float]
 ) -> DataFrame:
-    """Locate phase shared by the bucket_refine variants: from a
+    """Locate phase of ``bucket_refine_quantiles``: from a
     (keys…, _b, _cnt) bucket table, the bucket holding each target
     rank plus the rank offset inside it — (keys…, _q, _w, _frac, _b,
     _off), two rows (lo/hi bracket) per prob per group.
@@ -322,7 +291,7 @@ def _pick_and_interpolate(
     value_divisor: float,
     count_col: str,
 ) -> DataFrame:
-    """Pick phase shared by the bucket_refine variants: from
+    """Pick phase of ``bucket_refine_quantiles``: from
     within-target-bucket value-histogram rows carrying _q/_w/_off/
     _frac, cum-sum to the _off-th smallest value per (group, rank)
     and interpolate lo·(1-frac) + hi·frac in the value_divisor'd

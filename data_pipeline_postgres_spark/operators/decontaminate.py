@@ -24,7 +24,7 @@ Scale shape (the whole point at 100 TB):
   sets use 10-13.
 
 Determinism: tokenization and shingling are pure string ops mirrored
-exactly by the DuckDB oracle (plans/queries_ext.py) — no hashing, no
+exactly by the DuckDB oracle (plans/queries_curation.py) — no hashing, no
 floats anywhere.
 """
 

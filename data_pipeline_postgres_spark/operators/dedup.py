@@ -406,7 +406,7 @@ def minhash_incremental_dedup(
     and the corpus side is the (doc_id, band_key) relation
     ``minhash_bands`` emits — pass it as ``corpus_bands`` to use a
     STORED index maintained at ingest (append-only, one row per
-    doc·band; see plans/queries_ext._minhash_corpus_index for the
+    doc·band; see plans/queries_dedup._minhash_corpus_index for the
     materialized-parquet path and streaming/jobs.stream_minhash_dedup
     for the append-only streaming variant), so the standing cost per
     day is one band-key equi-join of |batch|·bands rows against the
@@ -536,7 +536,7 @@ def simhash_pairs(
 
     ``fingerprints``: optional precomputed ``simhash(docs)`` relation
     (doc_id, simhash) — fingerprints are write-once artifacts, so
-    callers with a stored fingerprint index (queries_ext.
+    callers with a stored fingerprint index (queries_dedup.
     _simhash_fp_index) pass it here and skip the token scan entirely;
     the per-probe cost is then just the band join + popcount verify.
     """

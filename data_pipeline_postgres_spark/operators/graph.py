@@ -32,7 +32,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iters: int = 8,
-    broadcast_ranks: bool = True,
     prenormalized: bool = False,
     quantize_bits: int | None = None,
     dangling: bool = False,
@@ -50,9 +49,9 @@ def pagerank(
     D is a ONE-ROW aggregate broadcast onto the rank update (no
     driver collect, no per-round action); rank mass then sums to
     exactly 1 each round (property-tested against a dense power
-    iteration in tests/test_graph_dangling.py). The flagged path
-    costs one extra semi-join + broadcast per superstep, so the
-    sink-free default keeps its leaner plan.
+    iteration in tests/test_round9.py, TestPagerankDangling). The
+    flagged path costs one extra semi-join + broadcast per superstep,
+    so the sink-free default keeps its leaner plan.
     Iteration count is fixed (no convergence collect): 8 rounds
     contract the rank vector by d⁸ ≈ 0.27 of the remaining error,
     plenty for top-k ranking stability, and a deterministic plan.
@@ -73,18 +72,16 @@ def pagerank(
     centrality query carry a DuckDB oracle instead of a rows-only
     check.
 
-    ``broadcast_ranks=True`` ships the rank vector (one row per NODE
-    — orders of magnitude smaller than the edge list) to every
-    executor each superstep, so the per-round shuffle is ONLY the
-    destination-keyed contribution aggregate and the checkpointed
-    edge relation never re-exchanges (measured ~3× on the
-    co-purchase graph). Disable only for graphs whose node count
-    itself exceeds broadcast capacity — then both sides hash on src.
+    The rank vector (one row per NODE — orders of magnitude smaller
+    than the edge list) is broadcast to every executor each
+    superstep, so the per-round shuffle is ONLY the destination-keyed
+    contribution aggregate and the edge relation never re-exchanges
+    (measured ~3× on the co-purchase graph).
 
     ``prenormalized=True`` declares that ``edges`` already carries
     the transition probability column ``p`` (weight/out-weight) AND
     is already materialized (e.g. a stored edge-index parquet — see
-    plans/queries_analytics._copurchase_edge_index): the out-weight
+    plans/queries_graph._copurchase_edge_index): the out-weight
     aggregate and the checkpoint are both skipped, so a centrality
     run against a prepared graph artifact starts straight at
     superstep 1.
@@ -148,7 +145,7 @@ def pagerank(
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     scale = float(2**quantize_bits) if quantize_bits else None
     for i in range(iters):
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
+        r = F.broadcast(ranks)
         c = F.col("rank") * F.col("p")
         if scale:
             c = F.floor(c * F.lit(scale)) / F.lit(scale)
@@ -281,7 +278,6 @@ def copurchase_edges(lineitem: DataFrame, part: DataFrame) -> DataFrame:
 def label_propagation(
     edges: DataFrame,
     iters: int = 5,
-    broadcast_labels: bool = True,
 ) -> DataFrame:
     """Synchronous label-propagation community detection over a
     directed edge list (src, dst, weight): every node starts as its
@@ -314,7 +310,7 @@ def label_propagation(
         .withColumn("label", F.col("node"))
     )
     for i in range(iters):
-        lab = F.broadcast(labels) if broadcast_labels else labels
+        lab = F.broadcast(labels)
         w_in = (
             edges.join(lab, edges["src"] == lab["node"])
             .groupBy(F.col("dst").alias("n2"), "label")

@@ -1,6 +1,6 @@
 """Inverted-index construction over the documents table
 (SURVEY.md §2.11 [EXT] — search-side counterpart of the TF-IDF and
-rarity scorers in textstats/queries_ext).
+rarity scorers in textstats/queries_text).
 
 The 100 TB shape: term postings are built with a rank-limited window
 (``row_number() <= k`` directly above the window lets Spark plan a

@@ -17,6 +17,7 @@ the payload column (column pruning keeps binary out of the scan).
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
@@ -26,6 +27,12 @@ from pyspark.sql import types as T
 
 if TYPE_CHECKING:
     import pandas as pd
+
+# The gear-hash CDC table: md5-derived per byte value (first 8 hex
+# chars -> int32 range), identical in both engines.
+GEAR = tuple(
+    int(hashlib.md5(str(b).encode()).hexdigest()[:8], 16) for b in range(256)
+)
 
 DECODED_SCHEMA = T.StructType(
     [
@@ -242,7 +249,7 @@ def cdc_manifest_np(docs: DataFrame, mask: int) -> DataFrame:
     """Gear-hash CDC manifest via the vectorized Arrow kernel:
     (doc_id, chunk_idx, start_byte, chunk_len, chunk_md5) — the fast
     twin of the pure-SQL per-byte fold in
-    ``plans.queries_r12._cdc_manifest_sql``, byte-identical output
+    ``plans.queries_dedup._cdc_manifest_sql``, byte-identical output
     (asserted in tests/test_round15_opt.py): same windowed gear hash
     as ``cdc_chunks_np`` (see its docstring for the boundary-semantics
     proof), and ``chunk_md5 = md5(lowercase-hex(chunk bytes))`` is
@@ -259,9 +266,7 @@ def cdc_manifest_np(docs: DataFrame, mask: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..plans.queries_r12 import _GEAR
-
-    gear = np.array(_GEAR, dtype=np.uint64)
+    gear = np.array(GEAR, dtype=np.uint64)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         md5 = hashlib.md5
@@ -327,7 +332,7 @@ def cdc_manifest_np(docs: DataFrame, mask: int) -> DataFrame:
 def cdc_chunks_np(docs: DataFrame, mask: int) -> DataFrame:
     """Content-defined chunk stream via a vectorized Arrow-batched
     kernel: (doc_id, chunk binary) — the fast twin of the pure-SQL
-    gear fold in ``plans.queries_r12.q_multimodal_cdc_chunks``.
+    gear fold in ``plans.queries_dedup.q_multimodal_cdc_chunks``.
 
     Identical boundary semantics, proven by construction: a position
     p >= 31 is a cut iff the 32-byte windowed gear hash
@@ -349,9 +354,7 @@ def cdc_chunks_np(docs: DataFrame, mask: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..plans.queries_r12 import _GEAR
-
-    gear = np.array(_GEAR, dtype=np.uint64)
+    gear = np.array(GEAR, dtype=np.uint64)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),

@@ -20,6 +20,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Count-Min sketch shape: d md5-derived hash rows x w counters.
+CMS_D = 4
+CMS_W = 256
+
+
+def cms_bucket(r: int) -> F.Column:
+    """Hash row ``r``'s counter index of the ``tok`` column."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.col("tok"), F.lit(f"#{r}"))), 1, 15
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        % F.lit(CMS_W)
+    )
+
 
 def hll_daily_sketches(
     events: DataFrame, lg_k: int = 14

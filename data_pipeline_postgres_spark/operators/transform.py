@@ -61,13 +61,6 @@ def derive_material_grams(df: DataFrame, demand_col: str = "demand") -> DataFram
     return out
 
 
-def cast_numeric(df: DataFrame, col: str, to: str = "double") -> DataFrame:
-    """String→numeric ingest cast — the reference's
-    ``CAST(demand AS NUMERIC)`` (reference:
-    mnt/dags/unused_pipeline_sourcecode.py:43)."""
-    return df.withColumn(col, F.col(col).cast(to))
-
-
 def arith_mul(df: DataFrame, col: str, factor: float, alias: str) -> DataFrame:
     """Multiply-by-literal (grams per unit — reference:
     mnt/dags/02datalake_to_datawarehouse.py:65-67)."""

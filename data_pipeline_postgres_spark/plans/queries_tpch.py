@@ -30,10 +30,6 @@ from ..catalog import load_table
 from .registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _dec_price(col: str) -> F.Column:
     return F.col(col).cast("decimal(12,2)")
 
@@ -74,7 +70,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushed to parquet, 8 aggregates over ~4 groups — the
     shuffle carries only the grouped partials (map-side combine), so
     wall time is the codegen'd scan."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.to_timestamp(F.lit("2001-08-06"))
     )
     qty = F.col("l_quantity").cast("decimal(12,2)")
@@ -126,11 +122,11 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     heads), never a single-partition sort. l_orderkey tiebreak makes
     the cut deterministic across engines."""
     cutoff = F.to_timestamp(F.lit("1998-06-01"))
-    c = _t(spark, sf_dir, "customer").filter(
+    c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     rev = _dec_price("l_extendedprice") * (F.lit(1) - _dec_rate("l_discount"))
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
@@ -171,15 +167,15 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     it exceeds the broadcast threshold). The co-location predicate
     (c_nationkey = s_nationkey) rides the supplier broadcast join as
     an extra equi-condition — no extra shuffle."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.to_timestamp(F.lit("1997-01-01")))
         & (F.col("o_orderdate") < F.to_timestamp(F.lit("1998-01-01")))
     )
-    c = _t(spark, sf_dir, "customer")
-    li = _t(spark, sf_dir, "lineitem")
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region"))
+    c = load_table(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
+    r = F.broadcast(load_table(spark, sf_dir, "region"))
     rev = _dec_price("l_extendedprice") * (F.lit(1) - _dec_rate("l_discount"))
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
@@ -226,7 +222,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet scan as a pushed filter, the single global sum is a
     map-side partial — the cheapest possible plan, and the classic
     predicate-pushdown litmus test."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.to_timestamp(F.lit("1996-01-01")))
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-01-01")))
         & (F.col("l_discount").between(0.05, 0.07))
@@ -260,11 +256,11 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     line shipped >90 days after the order date. The EXISTS compiles to
     a LEFT SEMI join on orderkey with the lateness inequality riding
     the same join — one shuffle, no count-then-filter."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.to_timestamp(F.lit("1996-01-01")))
         & (F.col("o_orderdate") < F.to_timestamp(F.lit("1996-04-01")))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         o.join(
             li,
@@ -305,14 +301,14 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     year. The nation table joins TWICE (supplier side and customer
     side) — both broadcast — and the pair predicate is applied after
     both are attached; facts shuffle once on orderkey."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.to_timestamp(F.lit("1996-01-01")))
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1998-01-01")))
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    n = load_table(spark, sf_dir, "nation")
     n1 = F.broadcast(n.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     ))
@@ -361,13 +357,13 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by lost revenue (returned
     items) in a quarter. Facts shuffle on orderkey, nation broadcasts,
     the top-20 is TakeOrderedAndProject with a custkey tiebreak."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.to_timestamp(F.lit("1997-10-01")))
         & (F.col("o_orderdate") < F.to_timestamp(F.lit("1998-01-01")))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -402,8 +398,8 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(o_orderkey) counts matches only, so never-ordered customers
     land in the c_count=0 bucket; the second aggregate is over one row
     per customer."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     )
     return (
@@ -432,11 +428,11 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts into the filtered lineitem scan; both conditional and
     total sums ride ONE aggregate (no second pass); the ratio is a
     single double division of two exact decimal sums."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-09-01")))
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-10-01")))
     )
-    p = F.broadcast(_t(spark, sf_dir, "part"))
+    p = F.broadcast(load_table(spark, sf_dir, "part"))
     agg = (
         li.join(p, F.col("p_partkey") == F.col("l_partkey"))
         .agg(
@@ -478,9 +474,9 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact — at scale both the pre-agg and the main agg shuffle on
     the SAME key (orderkey), so AQE can reuse the exchange; customer
     broadcasts; top-100 is TakeOrderedAndProject."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("_q"))
@@ -525,8 +521,8 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     can only apply post-join — but each side's single-table prefilter
     (quantity ∈ [1,30], the brand list) is implied by the OR and Spark
     pushes the partial predicates to both scans; part broadcasts."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = F.broadcast(_t(spark, sf_dir, "part"))
+    li = load_table(spark, sf_dir, "lineitem")
+    p = F.broadcast(load_table(spark, sf_dir, "part"))
     band = (
         (
             (F.col("p_brand") == "Brand#12")
@@ -579,8 +575,8 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row scalar (exact decimal sum / count, one double division, so
     both engines compare against bit-identical thresholds); inactivity
     is an ANTI join against the date-filtered orders."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.to_timestamp(F.lit("1999-01-01"))
     )
     avg_bal = (
@@ -637,18 +633,18 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     region, by year. Nation joins twice (customer-region gate,
     supplier tag); conditional and total volume share ONE aggregate;
     the share is a single double division of exact decimal sums."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.to_timestamp(F.lit("1996-01-01")))
         & (F.col("o_orderdate") < F.to_timestamp(F.lit("1998-01-01")))
     )
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     p = F.broadcast(
-        _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+        load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     )
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
-    n = _t(spark, sf_dir, "nation")
-    r = F.broadcast(_t(spark, sf_dir, "region"))
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    n = load_table(spark, sf_dir, "nation")
+    r = F.broadcast(load_table(spark, sf_dir, "region"))
     n1 = F.broadcast(
         n.join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .filter(F.col("r_name") == "AMERICA")
@@ -710,7 +706,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue. The max is a broadcast scalar compared in EXACT DECIMAL
     (ties survive identically on both engines); only the final output
     lowers to double."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-01-01")))
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-04-01")))
     )
@@ -718,7 +714,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_rev()).alias("total_rev")
     )
     mx = rev.agg(F.max("total_rev").alias("mx"))
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
     return (
         rev.crossJoin(F.broadcast(mx))
         .filter(F.col("total_rev") == F.col("mx"))
@@ -755,7 +751,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     partkey (the standard rewrite; both aggs share the partkey
     shuffle). The average is an exact-decimal-sum / count double, so
     the 0.2× threshold is bit-identical across engines."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pavg = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         (
             F.sum(F.col("l_quantity").cast("decimal(12,2)")).cast("double")
@@ -763,7 +759,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_qty")
     )
     p = F.broadcast(
-        _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
+        load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
     )
     return (
         li.join(p, F.col("p_partkey") == F.col("l_partkey"))
@@ -812,8 +808,8 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_supp ≥ 2 ∧ n_late_supp = 1 ⇔ another supplier exists and no
     OTHER supplier is late, given the probe line is late) — both aggs
     and the probe share the orderkey shuffle."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    li = load_table(spark, sf_dir, "lineitem")
     lo = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
         "l_orderkey",
         "l_suppkey",
@@ -828,9 +824,9 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("late"), F.col("l_suppkey"))
         ).alias("n_late_supp"),
     )
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
     n = F.broadcast(
-        _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
+        load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
     )
     return (
         lo.filter(F.col("late"))
@@ -867,8 +863,8 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flag stands in). Both CASE-sums ride ONE aggregate; the
     lateness predicate joins fact to fact on orderkey and the date
     band pushes to the lineitem scan."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-01-01")))
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1998-01-01")))
     )
@@ -885,7 +881,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
         )
     )
-
 
 
 # ---------------------------------------------------------------------------
@@ -919,7 +914,7 @@ _PARTSUPP_SQL = """
 
 def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived partsupp in exact cent space (see block comment)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.col("l_partkey").alias("ps_partkey"),
         F.col("l_suppkey").alias("ps_suppkey"),
@@ -971,15 +966,15 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     is total, so LIMIT 100 cuts deterministically."""
     ps = _partsupp(spark, sf_dir)
     p = F.broadcast(
-        _t(spark, sf_dir, "part").filter(
+        load_table(spark, sf_dir, "part").filter(
             F.col("p_size").isin(5, 15, 25, 45)
             & (F.col("p_type") == "LARGE")
         )
     )
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
     r = F.broadcast(
-        _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+        load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     )
     cand = (
         ps.join(p, F.col("p_partkey") == F.col("ps_partkey"))
@@ -1045,14 +1040,14 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join that prunes lineitem before any shuffle; derived
     partsupp joins on the same (partkey, suppkey) key it was built on;
     orders joins on the orderkey shuffle; supplier/nation broadcast."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     p = F.broadcast(
-        _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+        load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     )
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
     ps = _partsupp(spark, sf_dir)
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rev = _dec_price("l_extendedprice") * (F.lit(1) - _dec_rate("l_discount"))
     # Cast BOTH operands to decimal BEFORE the multiply: an int64
     # product would wrap silently (ANSI off) once cents × centi-units
@@ -1113,9 +1108,9 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal compare — no float threshold at the boundary). Dollars
     appear only in the output projection."""
     ps = _partsupp(spark, sf_dir)
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
     n = F.broadcast(
-        _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+        load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
     )
     pv = (
         ps.join(s, F.col("s_suppkey") == F.col("ps_suppkey"))
@@ -1172,14 +1167,14 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a partial distinct."""
     ps = _partsupp(spark, sf_dir)
     p = F.broadcast(
-        _t(spark, sf_dir, "part").filter(
+        load_table(spark, sf_dir, "part").filter(
             (F.col("p_brand") != "Brand#1")
             & (F.col("p_type") != "PROMO")
             & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35)
         )
     )
     bad = F.broadcast(
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
@@ -1228,7 +1223,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     partsupp on its own grouping key, part-name semi-join via
     broadcast, nation gate."""
     ps = _partsupp(spark, sf_dir)
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-01-01")))
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1998-01-01")))
     )
@@ -1238,13 +1233,13 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     small = F.broadcast(
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("small%"))
         .select("p_partkey")
     )
-    s = F.broadcast(_t(spark, sf_dir, "supplier"))
+    s = F.broadcast(load_table(spark, sf_dir, "supplier"))
     n = F.broadcast(
-        _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
+        load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
     )
     return (
         ps.join(small, F.col("p_partkey") == F.col("ps_partkey"), "left_semi")

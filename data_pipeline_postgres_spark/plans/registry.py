@@ -30,9 +30,15 @@ ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a query implementation and optionally its SQL oracle."""
+    """Register a query implementation and optionally its SQL oracle.
+
+    This is the only writer of ``QUERIES`` and ``ORACLES``. A name that
+    is already registered raises, so a duplicated declaration fails at
+    import instead of silently replacing the first one."""
 
     def deco(fn: QueryFn) -> QueryFn:
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
@@ -77,13 +83,14 @@ def driver_order(
 
 def load_all() -> None:
     """Import every module that registers queries (idempotent)."""
-    from . import queries_analytics  # noqa: F401
-    from . import queries_core  # noqa: F401
-    from . import queries_ext  # noqa: F401
-    from . import queries_r9  # noqa: F401
-    from . import queries_r11  # noqa: F401
-    from . import queries_r12  # noqa: F401
-    from . import queries_r13  # noqa: F401
-    from . import queries_r14  # noqa: F401
-    from . import queries_r15  # noqa: F401
+    from . import queries_commerce  # noqa: F401
+    from . import queries_curation  # noqa: F401
+    from . import queries_dedup  # noqa: F401
+    from . import queries_events  # noqa: F401
+    from . import queries_graph  # noqa: F401
+    from . import queries_io  # noqa: F401
+    from . import queries_relational  # noqa: F401
+    from . import queries_search  # noqa: F401
+    from . import queries_streaming  # noqa: F401
+    from . import queries_text  # noqa: F401
     from . import queries_tpch  # noqa: F401

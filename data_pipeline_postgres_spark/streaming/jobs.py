@@ -66,6 +66,7 @@ from ..catalog import (
     table_path,
 )
 from ..operators.aggregate import exact_sum
+from ..operators.sketches import CMS_D, cms_bucket
 from ..scratch import SCRATCH_ROOT
 
 if TYPE_CHECKING:
@@ -74,6 +75,11 @@ if TYPE_CHECKING:
 
 _SCRATCH = os.path.join(SCRATCH_ROOT, "streaming")
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# Competence-curriculum phase count (docs_curriculum_pacing's too).
+CURR_PHASES = 10
+# IVM refresh batches: deletes are l_orderkey % 97 == 0, inserts a
+# modified copy of l_orderkey % 89 == 0 (pipeline_ivm_agg_maintenance).
+IVM_DEL_MOD, IVM_INS_MOD = 97, 89
 
 
 def _scratch(name: str, fresh: bool = True) -> str:
@@ -967,7 +973,6 @@ def cms_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     token volume; point-frequency queries read the standing counters
     without any raw-data rescan."""
     from ..functions import text as TX
-    from ..plans.queries_r9 import _CMS_D, _cms_bucket
 
     docs = load_table(spark, sf_dir, "documents")
     stream = _split_source(spark, docs, "doc_id", "cms_src")
@@ -975,7 +980,7 @@ def cms_rollup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.select(F.explode(TX.tokens("text")).alias("tok"))
         .select(
             F.posexplode(
-                F.array(*[_cms_bucket(r) for r in range(_CMS_D)])
+                F.array(*[cms_bucket(r) for r in range(CMS_D)])
             ).alias("r", "bucket")
         )
     )
@@ -1339,8 +1344,6 @@ def curriculum_pacing_stream(
     just that batch; standing state is one partial row per distinct
     difficulty value per batch (bounded by the token-count range,
     never corpus size), and the pacing pass never rescans history."""
-    from ..plans.queries_r13 import _CURR_PHASES
-
     docs = load_table(spark, sf_dir, "documents")
     stream = _split_source(spark, docs, "doc_id", "curr_src")
     sink, read = _spool(spark, "curr_partials")
@@ -1381,10 +1384,10 @@ def curriculum_pacing_stream(
         F.sum("dtok").over(w).cast("bigint").alias("ctok"),
     )
     comp = F.sqrt(
-        F.col("phase").cast("double") / F.lit(float(_CURR_PHASES))
+        F.col("phase").cast("double") / F.lit(float(CURR_PHASES))
     )
     targets = (
-        spark.range(1, _CURR_PHASES + 1)
+        spark.range(1, CURR_PHASES + 1)
         .select(F.col("id").cast("bigint").alias("phase"))
         .crossJoin(F.broadcast(tot))
         .select(
@@ -1516,7 +1519,7 @@ def scd2_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ivm_agg_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental view maintenance — the ingest-side twin of
-    the batch ``pipeline_ivm_agg_maintenance`` (queries_r14.py): a
+    the batch ``pipeline_ivm_agg_maintenance`` (queries_streaming.py): a
     standing q1-style pricing aggregate absorbs a 3-batch AvailableNow
     refresh stream (base load, delete batch, insert batch) as SIGNED
     PARTIALS, never re-aggregating the base relation.
@@ -1542,8 +1545,6 @@ def ivm_agg_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identically to the oracle's direct recompute of the refreshed
     relation.
     """
-    from ..plans.queries_r14 import _IVM_DEL_MOD, _IVM_INS_MOD
-
     li = load_table(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("decimal(18,2)")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -1567,10 +1568,10 @@ def ivm_agg_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(
             F.lit(0),
             F.when(
-                F.col("l_orderkey") % _IVM_DEL_MOD == 0, F.lit(1)
+                F.col("l_orderkey") % IVM_DEL_MOD == 0, F.lit(1)
             ).otherwise(F.lit(-1)),
             F.when(
-                F.col("l_orderkey") % _IVM_INS_MOD == 0, F.lit(2)
+                F.col("l_orderkey") % IVM_INS_MOD == 0, F.lit(2)
             ).otherwise(F.lit(-1)),
         ),
         -1,

@@ -11,7 +11,7 @@ import os
 import pytest
 
 from data_pipeline_postgres_spark.operators import graph
-from data_pipeline_postgres_spark.plans import queries_r11, registry
+from data_pipeline_postgres_spark.plans import queries_text, registry
 
 from .conftest import SF_ORACLE, SF_SMOKE
 from .oracle_util import assert_matches_oracle, duck_connect
@@ -34,8 +34,8 @@ def _assert_bit_identical(spark, edges, node_type: str) -> None:
 
 
 def test_textrank_graph_bit_identical(spark):
-    counts = queries_r11._textrank_bigram_counts(spark, SF_ORACLE).collect()
-    edges, degree = queries_r11._textrank_edges(counts)
+    counts = queries_text._textrank_bigram_counts(spark, SF_ORACLE).collect()
+    edges, degree = queries_text._textrank_edges(counts)
     assert len(edges) > len(degree) > 10
     _assert_bit_identical(spark, edges, "string")
 
@@ -68,7 +68,7 @@ def test_empty_graph():
 def test_textrank_matches_oracle(spark, sf_dir):
     registry.load_all()
     df = registry.QUERIES["text_textrank_keywords"](spark, sf_dir)
-    assert df.schema == queries_r11._TEXTRANK_SCHEMA
+    assert df.schema == queries_text._TEXTRANK_SCHEMA
     con = duck_connect(sf_dir)
     try:
         assert_matches_oracle(

@@ -16,6 +16,8 @@ from hypothesis import strategies as st
 
 from data_pipeline_postgres_spark.operators import aggregate
 
+from .conftest import SF_SMOKE
+
 # duplicate-heavy small domain plus bucket-boundary straddlers
 VALUES = st.lists(
     st.one_of(
@@ -82,7 +84,7 @@ class TestQuantilePlanContract:
         from data_pipeline_postgres_spark.plans import registry
 
         registry.load_all()
-        df = registry.QUERIES[name](spark, "/root/testdata/sf0.001")
+        df = registry.QUERIES[name](spark, SF_SMOKE)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "percentile(" not in plan
 

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from data_pipeline_postgres_spark.operators import similarity
 from data_pipeline_postgres_spark.plans import registry
 
+from .conftest import SF_SMOKE
+
 registry.load_all()
 
 
@@ -226,7 +228,7 @@ class TestTheilSenLongCalendarGuard:
     length instead of silently going quadratic past ~5.5 years."""
 
     def test_raises_past_ceiling(self, spark, tmp_path):
-        from data_pipeline_postgres_spark.plans.queries_r9 import (
+        from data_pipeline_postgres_spark.plans.queries_commerce import (
             _TS_MAX_DAYS,
         )
 
@@ -255,7 +257,7 @@ class TestTheilSenLongCalendarGuard:
 
     def test_normal_calendar_still_runs(self, spark):
         row = registry.QUERIES["orders_theil_sen_trend"](
-            spark, "/root/testdata/sf0.001"
+            spark, SF_SMOKE
         ).collect()[0]
         assert row["n_pairs"] == row["n_days"] * (row["n_days"] - 1) // 2
 
@@ -270,7 +272,7 @@ class TestStoredIndexAtomicPublish:
         from data_pipeline_postgres_spark import scratch
 
         monkeypatch.setattr(scratch, "SCRATCH_ROOT", str(tmp_path))
-        sf = "/root/testdata/sf0.001"
+        sf = SF_SMOKE
         calls = []
 
         def build():

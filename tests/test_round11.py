@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 
 from data_pipeline_postgres_spark.plans import registry
 
-registry.load_all()
+from .conftest import SF_ORACLE as SF
 
-SF = "/root/testdata/sf0.01"
+registry.load_all()
 
 
 class TestBandSweepMonotone:

@@ -10,9 +10,10 @@ from pyspark.sql import functions as F
 
 from data_pipeline_postgres_spark.plans import registry
 
+from .conftest import SF_ORACLE, SF_SMOKE as SF
+
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 L = 512
 
 
@@ -144,7 +145,7 @@ class TestPayloadDedup:
 
 
 class TestMixCappedAlloc:
-    @pytest.fixture(scope="class", params=[SF, "/root/testdata/sf0.01"])
+    @pytest.fixture(scope="class", params=[SF, SF_ORACLE])
     def alloc(self, request, spark):
         return registry.QUERIES["docs_mix_capped_alloc"](
             spark, request.param
@@ -810,7 +811,7 @@ class TestModularity:
             assert q > 0.0
         # the non-degenerate case is exercised at sf0.01
         row2 = registry.QUERIES["graph_modularity"](
-            spark, "/root/testdata/sf0.01"
+            spark, SF_ORACLE
         ).collect()[0]
         assert row2.n_communities > 1
         assert 0.0 < row2.q_num / row2.q_den <= 1.0

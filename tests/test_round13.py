@@ -12,21 +12,14 @@ from pyspark.sql import functions as F
 
 from data_pipeline_postgres_spark.plans import registry
 
+from .conftest import SF_SMOKE as SF
+
 registry.load_all()
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from tests.conftest import get_spark
-
-    return get_spark()
 
 
 class TestKaplanMeierExhaustedRiskSet:
     """The advertised NULL semantics are data-dependent; synthesize
-    the data that hits them (r12 advisory, queries_r12.py KM oracle).
+    the data that hits them (r12 advisory, queries_commerce.py KM oracle).
 
     Construction: the censored max-date holder lives in bin 0 while a
     long-lived churned customer lands alone in bin 1 — so bin 1's
@@ -94,7 +87,7 @@ class TestCdcChunksKernel:
 
     def test_kernel_equals_sql_fold_mask64(self, spark):
         from data_pipeline_postgres_spark.operators import multimodal
-        from data_pipeline_postgres_spark.plans.queries_r12 import (
+        from data_pipeline_postgres_spark.plans.queries_dedup import (
             q_multimodal_cdc_chunks,
         )
 
@@ -154,7 +147,7 @@ class TestMutualKnnAnn:
     def test_recall_gate_vs_exact(self, spark):
         """Verdict r12 item 6 gate: ANN-candidate mutual kNN recovers
         >= 0.9 of the exact reciprocal pair set (dedup_embedding_lsh
-        precedent; regime notes in queries_r13)."""
+        precedent; regime notes in queries_search)."""
         exact = {
             (r.vec_id_a, r.vec_id_b)
             for r in registry.QUERIES["emb_mutual_knn"](

@@ -48,7 +48,7 @@ class TestPriceIndex:
             spark, SF
         ).collect()
         assert rows
-        from data_pipeline_postgres_spark.plans.queries_r15 import (
+        from data_pipeline_postgres_spark.plans.queries_commerce import (
             _PIDX_BASE,
         )
 
@@ -124,7 +124,7 @@ class TestBpeApply:
         import duckdb
 
         from data_pipeline_postgres_spark.operators import bpe
-        from data_pipeline_postgres_spark.plans.queries_r15 import (
+        from data_pipeline_postgres_spark.plans.queries_text import (
             _BPE_APPLY_MERGES,
             _BPE_APPLY_TRAIN_TYPES,
         )

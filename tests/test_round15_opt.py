@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_postgres_spark.operators import multimodal
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE as SF
 
 
 def _docs(spark):
@@ -145,7 +145,7 @@ def test_dup_spectrum_pyramid_matches_md5_chain(spark):
     md5 shift-join chain's spectrum exactly (equality structure is
     all that feeds the output). Partition, batch and edge-case checks
     of the kernel are in tests/test_textdup.py."""
-    from data_pipeline_postgres_spark.plans.queries_r12 import (
+    from data_pipeline_postgres_spark.plans.queries_curation import (
         _SPECTRUM_ROUNDS,
         q_docs_dup_spectrum,
     )
@@ -163,7 +163,7 @@ def test_dup_spectrum_pyramid_matches_md5_chain(spark):
 
 
 def test_dup_maxrun_pyramid_matches_md5_chain(spark):
-    from data_pipeline_postgres_spark.plans.queries_r12 import (
+    from data_pipeline_postgres_spark.plans.queries_curation import (
         _SPECTRUM_ROUNDS,
         q_docs_dup_maxrun,
     )
@@ -180,7 +180,7 @@ def test_dup_maxrun_pyramid_matches_md5_chain(spark):
 def test_cdc_manifest_kernel_matches_sql_fold(spark, mask):
     """cdc_manifest_np must be row-identical (all five columns) to
     the original pure-SQL per-byte gear fold at both masks in use."""
-    from data_pipeline_postgres_spark.plans.queries_r12 import (
+    from data_pipeline_postgres_spark.plans.queries_dedup import (
         _cdc_manifest_sql,
     )
 
@@ -206,9 +206,9 @@ def test_ivm_tagged_split_matches_sequential_batches(spark):
     import os
 
     from data_pipeline_postgres_spark.streaming import jobs as SJ
-    from data_pipeline_postgres_spark.plans.queries_r14 import (
-        _IVM_DEL_MOD,
-        _IVM_INS_MOD,
+    from data_pipeline_postgres_spark.streaming.jobs import (
+        IVM_DEL_MOD,
+        IVM_INS_MOD,
     )
     from data_pipeline_postgres_spark.catalog import load_table
 
@@ -228,11 +228,11 @@ def test_ivm_tagged_split_matches_sequential_batches(spark):
             "l_returnflag", "l_linestatus", "qty", "price",
             F.lit(1).alias("sign"),
         ),
-        typed.filter(F.col("l_orderkey") % _IVM_DEL_MOD == 0).select(
+        typed.filter(F.col("l_orderkey") % IVM_DEL_MOD == 0).select(
             "l_returnflag", "l_linestatus", "qty", "price",
             F.lit(-1).alias("sign"),
         ),
-        typed.filter(F.col("l_orderkey") % _IVM_INS_MOD == 0).select(
+        typed.filter(F.col("l_orderkey") % IVM_INS_MOD == 0).select(
             "l_returnflag",
             "l_linestatus",
             (F.col("qty") + 1).cast("decimal(18,2)").alias("qty"),
@@ -245,10 +245,10 @@ def test_ivm_tagged_split_matches_sequential_batches(spark):
         F.array(
             F.lit(0),
             F.when(
-                F.col("l_orderkey") % _IVM_DEL_MOD == 0, F.lit(1)
+                F.col("l_orderkey") % IVM_DEL_MOD == 0, F.lit(1)
             ).otherwise(F.lit(-1)),
             F.when(
-                F.col("l_orderkey") % _IVM_INS_MOD == 0, F.lit(2)
+                F.col("l_orderkey") % IVM_INS_MOD == 0, F.lit(2)
             ).otherwise(F.lit(-1)),
         ),
         -1,

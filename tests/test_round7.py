@@ -639,7 +639,7 @@ class TestStreaks:
         ev = spark.createDataFrame(rows, ["user_id", "ts"]).withColumn(
             "event_id", F.monotonically_increasing_id()
         )
-        from data_pipeline_postgres_spark.plans.queries_analytics import (
+        from data_pipeline_postgres_spark.plans.queries_events import (
             q_events_activity_streaks,
         )
         # run the same logic against the constructed frame via SQL path

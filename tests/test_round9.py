@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from data_pipeline_postgres_spark.operators import dedup, graph, similarity
 from data_pipeline_postgres_spark.plans import registry
 
-from .conftest import SF_SMOKE
+from .conftest import SF_ORACLE, SF_SMOKE
 
 registry.load_all()
 
@@ -221,15 +221,13 @@ class TestRound9Queries:
         """12 peel-rounds must BE the fixpoint at oracle scale (the
         sf0.01 strong co-purchase graph converges after 10): one more
         round changes nothing."""
-        from data_pipeline_postgres_spark.plans.queries_analytics import (
-            _copurchase_edge_index,
-        )
-        from data_pipeline_postgres_spark.plans.queries_r9 import (
+        from data_pipeline_postgres_spark.plans.queries_graph import (
             _KCORE_K,
             _KCORE_ROUNDS,
+            _copurchase_edge_index,
         )
 
-        edges = _copurchase_edge_index(spark, "/root/testdata/sf0.01")
+        edges = _copurchase_edge_index(spark, SF_ORACLE)
         edges = edges.filter(F.col("weight") >= 2)
         a = sorted(
             map(
@@ -281,7 +279,7 @@ class TestRound9Queries:
         """Guard against a trivially-empty oracle green: the eval
         split must actually flag training vectors at oracle scale."""
         df = registry.QUERIES["decontaminate_embedding"](
-            spark, "/root/testdata/sf0.01"
+            spark, SF_ORACLE
         )
         assert df.count() > 0
 
@@ -351,11 +349,11 @@ class TestBfsDistance:
     def test_bfs_is_fixpoint_at_oracle_scale(self, spark):
         """10 rounds must reach every node the hub can reach at
         sf0.01 (hub eccentricity is 9) — one more changes nothing."""
-        from data_pipeline_postgres_spark.plans.queries_analytics import (
+        from data_pipeline_postgres_spark.plans.queries_graph import (
             _copurchase_edge_index,
         )
 
-        edges = _copurchase_edge_index(spark, "/root/testdata/sf0.01")
+        edges = _copurchase_edge_index(spark, SF_ORACLE)
         edges = edges.filter(F.col("weight") >= 2)
         deg = edges.groupBy(F.col("src").alias("node")).agg(
             F.count("*").alias("d")
@@ -397,7 +395,7 @@ class TestRound9Invariants:
 
     def test_kcore_degrees_at_least_k(self, spark):
         rows = registry.QUERIES["graph_kcore"](
-            spark, "/root/testdata/sf0.01"
+            spark, SF_ORACLE
         ).collect()
         assert rows and min(r.degree for r in rows) >= 3
 
@@ -428,11 +426,11 @@ class TestRound9Invariants:
     def test_bfs_respects_edge_relaxation(self, spark):
         """At the fixpoint, every edge (u, v) with u reached must have
         dist(v) <= dist(u) + 1."""
-        from data_pipeline_postgres_spark.plans.queries_analytics import (
+        from data_pipeline_postgres_spark.plans.queries_graph import (
             _copurchase_edge_index,
         )
 
-        sf = "/root/testdata/sf0.01"
+        sf = SF_ORACLE
         dist = {
             r.node: r.dist
             for r in registry.QUERIES["graph_bfs_distance"](
@@ -700,7 +698,7 @@ class TestWeightedMedianAndHolt:
                 lambda x: F.struct(x.alias("l"), F.lit(0.0).alias("b")),
             ).alias("xs")
         )
-        from data_pipeline_postgres_spark.plans.queries_r9 import (
+        from data_pipeline_postgres_spark.plans.queries_commerce import (
             q_orders_revenue_holt_forecast,  # noqa: F401  (fold inline)
         )
 
@@ -744,9 +742,9 @@ class TestCountMinSketch:
         import pyspark.sql.functions as F
         from data_pipeline_postgres_spark.catalog import load_table
         from data_pipeline_postgres_spark.functions import text as TX
-        from data_pipeline_postgres_spark.plans.queries_r9 import (
-            _CMS_D,
-            _cms_bucket,
+        from data_pipeline_postgres_spark.operators.sketches import (
+            CMS_D,
+            cms_bucket,
         )
 
         docs = load_table(spark, SF_SMOKE, "documents")
@@ -757,7 +755,7 @@ class TestCountMinSketch:
             cells = exact.select(
                 "exact_ct",
                 F.posexplode(
-                    F.array(*[_cms_bucket(r) for r in range(_CMS_D)])
+                    F.array(*[cms_bucket(r) for r in range(CMS_D)])
                 ).alias("r", "bucket"),
             )
             return {
@@ -805,9 +803,9 @@ class TestBloomAndStreamCms:
         import pyspark.sql.functions as F
         from data_pipeline_postgres_spark.catalog import load_table
         from data_pipeline_postgres_spark.functions import text as TX
-        from data_pipeline_postgres_spark.plans.queries_r9 import (
-            _CMS_D,
-            _cms_bucket,
+        from data_pipeline_postgres_spark.operators.sketches import (
+            CMS_D,
+            cms_bucket,
         )
 
         stream = {
@@ -822,7 +820,7 @@ class TestBloomAndStreamCms:
             for r in docs.select(F.explode(TX.tokens("text")).alias("tok"))
             .select(
                 F.posexplode(
-                    F.array(*[_cms_bucket(x) for x in range(_CMS_D)])
+                    F.array(*[cms_bucket(x) for x in range(CMS_D)])
                 ).alias("r", "bucket")
             )
             .groupBy("r", "bucket")
@@ -1150,7 +1148,7 @@ class TestRandomWalks:
         md5 rule recomputed in Python."""
         import hashlib
 
-        from data_pipeline_postgres_spark.plans.queries_analytics import (
+        from data_pipeline_postgres_spark.plans.queries_graph import (
             _copurchase_edge_index,
         )
 
@@ -1541,17 +1539,16 @@ class TestNaiveBayesSource:
         }
         assert {r["pred_source"] for r in rows} <= srcs
 
-    def test_separable_corpus_classifies_perfectly(self, spark):
+    def test_separable_corpus_classifies_perfectly(self, spark, tmp_path):
         """On a corpus where each source has a disjoint vocabulary the
         confusion matrix must be diagonal — the classifier actually
         learns, even though the synthetic word-salad corpus reads
         chance-level."""
         import pandas as pd
 
-        from data_pipeline_postgres_spark.plans import queries_r9
+        from data_pipeline_postgres_spark.plans import queries_curation
 
-        scratch = "/tmp/nb_separable"
-        os.makedirs(scratch, exist_ok=True)
+        scratch = str(tmp_path)
         rows = []
         for d in range(40):
             src = f"s{d % 4}"
@@ -1566,7 +1563,7 @@ class TestNaiveBayesSource:
                 }
             )
         pd.DataFrame(rows).to_parquet(f"{scratch}/documents.parquet")
-        got = queries_r9.q_docs_naive_bayes_source(
+        got = queries_curation.q_docs_naive_bayes_source(
             spark, scratch
         ).collect()
         assert all(r["true_source"] == r["pred_source"] for r in got)
@@ -1608,17 +1605,16 @@ class TestTheilSen:
         assert got["n_pairs"] == n == len(pts) * (len(pts) - 1) // 2
         assert got["ts_slope"] == med
 
-    def test_outlier_robustness(self, spark):
+    def test_outlier_robustness(self, spark, tmp_path):
         """Theil-Sen on a clean ramp plus a few wild outlier days must
         recover the ramp slope exactly (median ignores the tails)."""
         import datetime as dt
 
         import pandas as pd
 
-        from data_pipeline_postgres_spark.plans import queries_r9
+        from data_pipeline_postgres_spark.plans import queries_commerce
 
-        scratch = "/tmp/ts_robust"
-        os.makedirs(scratch, exist_ok=True)
+        scratch = str(tmp_path)
         rows = []
         for i in range(30):
             price = 100.0 + 10.0 * i
@@ -1638,7 +1634,7 @@ class TestTheilSen:
         pdf = pd.DataFrame(rows)
         pdf["o_orderdate"] = pdf["o_orderdate"].astype("datetime64[us]")
         pdf.to_parquet(f"{scratch}/orders.parquet")
-        got = queries_r9.q_orders_theil_sen_trend(
+        got = queries_commerce.q_orders_theil_sen_trend(
             spark, scratch
         ).collect()[0]
         assert got["ts_slope"] == 10.0

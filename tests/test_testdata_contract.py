@@ -25,7 +25,7 @@ import pytest
 
 from tests.conftest import SF_SMOKE
 
-SF_DIRS = sorted(glob.glob("/root/testdata/sf*"))
+SF_DIRS = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMOKE), "sf*")))
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=os.path.basename)

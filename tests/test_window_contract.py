@@ -23,9 +23,10 @@ from __future__ import annotations
 
 from data_pipeline_postgres_spark.plans import registry
 
+from .conftest import SF_SMOKE as SF
+
 registry.load_all()
 
-SF = "/root/testdata/sf0.001"
 
 # The documented partition-less-window sites and why each is bounded.
 ALLOWED_UNPARTITIONED = {

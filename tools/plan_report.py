@@ -125,7 +125,7 @@ def accuracy_rows(spark, sf_dir):
     )
     import math as _math
 
-    from data_pipeline_postgres_spark.plans.queries_r9 import (
+    from data_pipeline_postgres_spark.plans.queries_relational import (
         _BLOOM_K,
         _BLOOM_M,
     )
@@ -145,9 +145,9 @@ def accuracy_rows(spark, sf_dir):
     # streaming CMS mergeability: drained sketch vs the batch sketch
     # rebuilt inline (same comparison tests/test_round9.py gates)
     from data_pipeline_postgres_spark.functions import text as TX
-    from data_pipeline_postgres_spark.plans.queries_r9 import (
-        _CMS_D,
-        _cms_bucket,
+    from data_pipeline_postgres_spark.operators.sketches import (
+        CMS_D,
+        cms_bucket,
     )
 
     stream_cells = {
@@ -160,7 +160,7 @@ def accuracy_rows(spark, sf_dir):
         .select(F.explode(TX.tokens("text")).alias("tok"))
         .select(
             F.posexplode(
-                F.array(*[_cms_bucket(x) for x in range(_CMS_D)])
+                F.array(*[cms_bucket(x) for x in range(CMS_D)])
             ).alias("r", "bucket")
         )
         .groupBy("r", "bucket")
